@@ -85,8 +85,8 @@ object Bench {
     // timing; if it never does, still run but stamp the record
     // "contended": true so the artifact is self-disqualifying rather
     // than silently noisy.
-    // Round-19 measurement fix (declared in OPTIMIZATION_r19.md): the
-    // old gate (cpus/4 = 8 on a 32-core box) stamped the r18 run
+    // Round-19 measurement fix: the old gate (cpus/4 = 8 on a 32-core
+    // box) stamped the r18 run
     // "contended: false" at load 5.9-7.1 while this box's measured
     // noise threshold is ~2.2 — 20 of that round's 37 "regressions"
     // were phantoms that an 8-core control run had to clear. The gate

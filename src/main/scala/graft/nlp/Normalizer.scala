@@ -32,9 +32,65 @@ object Normalizer {
     (quotes ++ apostrophes).toMap
   }
 
-  private val fullMap: Map[Char, Char] = accentMap ++ quoteMap
+  /** Accent and quote folding of `s`, char for char, without lowercasing. */
+  def mapChars(s: String): String = norm(s, foldOnly)
 
-  def mapChars(s: String): String = s.map(c => fullMap.getOrElse(c, c))
+  private val foldOnly = Options(lowercase = false)
+
+  /** `m` as an unboxed lookup: a direct table for Latin-1, binary search
+    * over the sorted keys above it.
+    */
+  private final class CharTable(m: Map[Char, Char]) {
+    private val latin1 =
+      Array.tabulate(256)(i => m.getOrElse(i.toChar, i.toChar))
+    private val keys = m.keys.filter(_ >= 256).toArray.sorted
+    private val values = keys.map(m)
+    def apply(c: Char): Char =
+      if (c < 256) latin1(c)
+      else {
+        val i = java.util.Arrays.binarySearch(keys, c)
+        if (i >= 0) values(i) else c
+      }
+  }
+
+  private val accentTable = new CharTable(accentMap)
+  private val quoteTable = new CharTable(quoteMap)
+
+  /** The token norm: lowercase, then accents, then quotes, per char (all
+    * three are char-for-char, so offsets stay fixed). Allocates only when
+    * some char changes.
+    */
+  private def norm(s: String, opts: Options): String = {
+    var out: Array[Char] = null
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      var d = c
+      if (opts.lowercase) d = Character.toLowerCase(d)
+      if (opts.accents) d = accentTable(d)
+      if (opts.quotes) d = quoteTable(d)
+      if (d != c) {
+        if (out == null) out = s.toCharArray
+        out(i) = d
+      }
+      i += 1
+    }
+    if (out == null) s else new String(out)
+  }
+
+  /** A pollution pattern plus literals one of which every match of it
+    * must contain, read off the pattern itself (never off a corpus). A
+    * text holding none of them cannot match, so the pattern is not run
+    * on it; with no literals it always runs. The gate skips only scans
+    * that would find nothing, so exclusions are the same on every input.
+    * It saves time only on texts holding none of the literals; a text
+    * holding one pays the full scan plus the literal search.
+    */
+  private[graft] final case class Gated(regex: String, anyOf: String*) {
+    val pattern: Pattern = Pattern.compile(regex)
+    def mayMatch(text: String): Boolean =
+      anyOf.isEmpty || anyOf.exists(text.contains(_))
+  }
 
   /** Pollution detectors (excluded char ranges), following the reference
     * bank (`pollution/patterns.py`) and its `default_enabled` set:
@@ -43,50 +99,53 @@ object Normalizer {
     * `biology` (table rows) and `coding` (ICD-10 blocks) stay off by
     * default there too — disease-name false positives.
     */
-  private val pollutionPatterns: Seq[Pattern] = Seq(
-    // bars: NBNbWbW filler + rules
-    "(?i)([nbw]|_|-|=){5,}",
-    // web/mail
-    "www\\.\\S*|\\S*@\\S*|\\S*\\.(?:fr|com|net|org)\\b",
+  private val pollutionPatterns: Seq[Gated] = Seq(
+    // bars: NBNbWbW filler + rules, as one char class (no alternation)
+    Gated("(?i)[nbw_=-]{5,}"),
+    // web/mail: each alternative holds one of the literals. Ungated, its
+    // leading `\S*` restarts at every char offset of every text.
+    Gated("www\\.\\S*|\\S*@\\S*|\\S*\\.(?:fr|com|net|org)\\b",
+      "www.", "@", ".fr", ".com", ".net", ".org"),
     // intraword line split
-    "(?<![\\W\\d_])-\\n",
+    Gated("(?<![\\W\\d_])-\\n", "-\n"),
     // leftside margin with doctor names
-    "(?mi)(^((dr)|(pr))(\\.|\\s|of).*)+",
+    Gated("(?mi)(^((dr)|(pr))(\\.|\\s|of).*)+"),
     // patient-information boilerplate block (condensed reference form)
-    "(?s)(=====+\\s*)?(Les\\s*donn[ée]es\\s*administratives,\\s*sociales\\s*" +
+    Gated("(?s)(=====+\\s*)?(Les\\s*donn[ée]es\\s*administratives,\\s*sociales\\s*" +
       "|I?nfo\\s*rmation\\s*aux?\\s*patients?" +
       "|L['’]AP-HP\\s*collecte\\s*vos\\s*donn[ée]es\\s*administratives)" +
-      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*",
+      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", "droit-opposition"),
     // print footer: a SHORT line starting with "imprimé le dd/mm/yyyy"
     // (page footers are standalone lines; requiring line-start + bounded
     // tail keeps narrative sentences that merely mention a print date)
-    "(?im)^\\s*imprim.\\sle\\s\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]{0,30}$",
+    Gated("(?im)^\\s*imprim.\\sle\\s\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]{0,30}$"),
     // page-footer family (pollution/patterns.py `footer`): a page
     // counter line ("1/3", "2/10?") followed by a patient line, or a
     // date + 10-digit IPP identifier line
-    "(?im)^\\d\\d?/\\d\\d?\\s?[^\\n]*\\n?pat[^\\n]*(\\n?courrier valid[^\\n]*)?",
+    Gated("(?im)^\\d\\d?/\\d\\d?\\s?[^\\n]*\\n?pat[^\\n]*(\\n?courrier valid[^\\n]*)?"),
     // date + IPP line (date BEFORE the 10-digit IPP, as the reference
     // footer has it): line-start anchored with one lookahead. The naive
     // form (leading unanchored `[^\n]*` before the date) backtracks
     // from every char position — O(len²) per doc, measured 0.8ms/doc
     // on the bench corpus vs ~1µs for this one, which attempts only at
     // line starts and scans each line once.
-    "(?m)^(?=[^\\n]*\\b\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]*80\\d{8})[^\\n]+",
+    Gated("(?m)^(?=[^\\n]*\\b\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]*80\\d{8})[^\\n]+"),
     // the second AP-HP information-block opener (patterns.py
     // `information`), same bounded tail to the droit-opposition URL
-    "(?s)L['’]Assistance\\s*Publique\\s*-\\s*H[ôo]pitaux\\s*de\\s*Paris\\s*" +
+    Gated("(?s)L['’]Assistance\\s*Publique\\s*-\\s*H[ôo]pitaux\\s*de\\s*Paris\\s*" +
       "\\(?AP-HP\\)?\\s*a\\s*cr[éee]{1,2}\\s*une\\s*base\\s*de\\s*donn[ée]es" +
-      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*",
+      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", "droit-opposition"),
     // tobacco-cessation banner (patterns.py `information` second entry)
-    "(?si)l['’]arr[êe]t\\s*du\\s*tabac\\s*permet\\s*de\\s*diminuer\\s*le\\s*" +
-      "risque\\s*de\\s*maladie\\s*cardiovasculaire\\."
-  ).map(Pattern.compile)
+    Gated("(?si)l['’]arr[êe]t\\s*du\\s*tabac\\s*permet\\s*de\\s*diminuer\\s*le\\s*" +
+      "risque\\s*de\\s*maladie\\s*cardiovasculaire\\.")
+  )
 
-  /** The live default pollution bank, exposed for the regex profiler
-    * (tools/ProfRegex) so measurements always reflect the shipped
-    * patterns instead of a hand-copied list that drifts.
+  /** The live default pollution bank with its literal gates, exposed for
+    * the regex profiler (tools/ProfRegex) and the equivalence tests, so
+    * both always see the shipped patterns and gates instead of a
+    * hand-copied list that drifts.
     */
-  private[graft] def defaultPollutionBank: Seq[Pattern] = pollutionPatterns
+  private[graft] def defaultPollutionBank: Seq[Gated] = pollutionPatterns
 
   /** Off-by-default pollution detectors, mirroring the reference's
     * `default_enabled` (pollution/patterns.py:60-69): biology table rows
@@ -119,7 +178,7 @@ object Normalizer {
       opts: Options = Options()): Array[Token] = {
     val active =
       if (!opts.pollution || text == null) Seq.empty
-      else pollutionPatterns ++
+      else pollutionPatterns.filter(_.mayMatch(text)).map(_.pattern) ++
         (if (opts.pollutionBiology) Seq(biologyPattern) else Nil) ++
         (if (opts.pollutionCoding) Seq(codingPattern) else Nil)
     val polluted: Array[(Int, Int)] =
@@ -131,13 +190,9 @@ object Normalizer {
       }.toArray
 
     tokens.map { t =>
-      var n = t.text
-      if (opts.lowercase) n = n.map(Character.toLowerCase) // fixed-length
-      if (opts.accents) n = n.map(c => accentMap.getOrElse(c, c))
-      if (opts.quotes) n = n.map(c => quoteMap.getOrElse(c, c))
       val excl =
         polluted.exists { case (b, e) => t.begin < e && t.end > b }
-      t.copy(norm = n, excluded = excl)
+      t.copy(norm = norm(t.text, opts), excluded = excl)
     }
   }
 

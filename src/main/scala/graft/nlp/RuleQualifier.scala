@@ -73,9 +73,14 @@ final class RuleQualifier(patterns: QualifierPatterns) extends Serializable {
     val starts =
       (sents.map(_.begin) ++ terminations.map(_.begin) :+ docEnd)
         .distinct.sorted
-    val boundaries = starts.zip(starts.drop(1))
 
+    // begin-sorted (filterSpans output order), so each scope's cues are
+    // one contiguous slice found by binary search
     val matches = SpanAlgebra.filterSpans(cues, Some("pseudo"))
+    val preceding = matches.filter(_.label == "preceding").toArray
+    val following = matches.filter(_.label == "following").toArray
+    val precBegins = preceding.map(_.begin)
+    val follBegins = following.map(_.begin)
 
     val results = Array.fill[(Boolean, Seq[Ent])](ents.size)((false, Nil))
 
@@ -91,19 +96,31 @@ final class RuleQualifier(patterns: QualifierPatterns) extends Serializable {
       }
     }
 
-    boundaries.foreach { case (bStart, bEnd) =>
-      val inScope = matches.filter(m => bStart <= m.begin && m.begin < bEnd)
-      lazy val preceding = inScope.filter(_.label == "preceding")
-      lazy val following = inScope.filter(_.label == "following")
-      ents.zipWithIndex.foreach { case (ent, i) =>
-        if (ent.begin < bEnd && ent.end > bStart) {
-          val cuesHit = new ArrayBuffer[Ent]
-          cuesHit ++= preceding.filter(_.end <= ent.begin)
-          cuesHit ++= following.filter(_.begin >= ent.end)
-          if (cuesHit.nonEmpty)
-            results(i) = (true, results(i)._2 ++ cuesHit)
+    // scope k is [starts(k), starts(k + 1)). An entity visits, in order,
+    // only the scopes it overlaps (starts(k) < ent.end and
+    // ent.begin < starts(k + 1)); in each it reads the preceding cues
+    // that begin in the scope and end before it, then the following
+    // cues that begin in the scope at or after its end.
+    import RuleQualifier.lowerBound
+    ents.iterator.zipWithIndex.foreach { case (ent, i) =>
+      val cuesHit = new ArrayBuffer[Ent]
+      var k = math.max(0, lowerBound(starts, ent.begin + 1) - 1)
+      while (k < starts.length - 1 && starts(k) < ent.end) {
+        var j = lowerBound(precBegins, starts(k))
+        val jEnd = lowerBound(precBegins, ent.begin + 1)
+        while (j < jEnd) {
+          if (preceding(j).end <= ent.begin) cuesHit += preceding(j)
+          j += 1
         }
+        j = lowerBound(follBegins, ent.end)
+        while (j < follBegins.length && follBegins(j) < starts(k + 1)) {
+          cuesHit += following(j)
+          j += 1
+        }
+        k += 1
       }
+      if (cuesHit.nonEmpty)
+        results(i) = (true, results(i)._2 ++ cuesHit)
     }
     results.toSeq
   }
@@ -118,5 +135,19 @@ final class RuleQualifier(patterns: QualifierPatterns) extends Serializable {
     ents.zip(res).map { case (e, (hit, _)) =>
       e.copy(attrs = e.attrs + (patterns.name -> hit.toString))
     }
+  }
+}
+
+object RuleQualifier {
+
+  /** First index of `xs` (ascending) whose value is `>= x`. */
+  private def lowerBound(xs: Array[Int], x: Int): Int = {
+    var lo = 0
+    var hi = xs.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (xs(mid) < x) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 }

@@ -140,6 +140,9 @@ object Dates {
   private def parseNum(s: String): Int =
     numberMap.getOrElse(s.toLowerCase, s.toIntOption.getOrElse(0))
 
+  /** Pagination false positive "1/3": single digit / single digit. */
+  private val pagination = Pattern.compile("\\d/\\d")
+
   private def canonUnit(u: String): String = {
     val base = graft.nlp.Normalizer.mapChars(u.toLowerCase)
     if (base == "mois") "mois"
@@ -220,7 +223,7 @@ object Dates {
     while (dmm.find()) {
       val matched = text.substring(dmm.start, dmm.end)
       // pagination false positive "1/3" (single digit / single digit)
-      if (!matched.matches("\\d/\\d")) {
+      if (!pagination.matcher(matched).matches()) {
         var attrs = Map("kind" -> "absolute",
           "day" -> dmm.group("d").toInt.toString,
           "month" -> dmm.group("m").toInt.toString)

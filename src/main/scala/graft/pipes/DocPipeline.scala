@@ -53,6 +53,18 @@ case class DocPipeline(
     * (`/root/reference/edsnlp/core/pipeline.py:373-400`).
     */
   def annotate(text: String): Annotations = {
+    val (tokens, sents, ents) = core(text)
+    val dateSpans = dates match {
+      case Some(o) => Dates.extract(text, None, faithful = o.faithful)
+      case None => Nil
+    }
+    Annotations(tokens.toSeq, sents.toSeq, ents, dateSpans)
+  }
+
+  /** The entity chain without the `dates` layer: tokens, sentences and
+    * qualified entities.
+    */
+  private def core(text: String): (Array[Token], Array[Sent], Seq[Ent]) = {
     val tokens = Normalizer.normalize(text, Tokenizer.tokenize(text), normOpts)
     val sents = Sentencizer.sentences(tokens)
     val rawEnts =
@@ -60,11 +72,7 @@ case class DocPipeline(
         regexMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil)
     var ents = SpanAlgebra.filterSpans(rawEnts)
     ruleQualifiers.foreach { q => ents = q.apply(text, tokens, sents, ents) }
-    val dateSpans = dates match {
-      case Some(o) => Dates.extract(text, None, faithful = o.faithful)
-      case None => Nil
-    }
-    Annotations(tokens.toSeq, sents.toSeq, ents, dateSpans)
+    (tokens, sents, ents)
   }
 
   /** Add an `anno` struct column (tokens/sents/ents) to `df`. */
@@ -73,15 +81,17 @@ case class DocPipeline(
     udf((s: String) => self.annotate(s)).apply(text)
   }
 
-  /** Entities-only column: same fused run, but the UDF RETURNS only the
-    * entity layer — encoding the full token layer (~150 structs/doc)
-    * through the UDF serializer just for a downstream explode("ents") to
-    * discard it was the dominant cost of the ents path, not the NLP
-    * itself.
+  /** Entities-only column: the UDF RETURNS only the entity layer —
+    * encoding the full token layer (~150 structs/doc) through the UDF
+    * serializer just for a downstream explode("ents") to discard it was
+    * the dominant cost of the ents path, not the NLP itself. For the
+    * same reason it runs only the entity chain: the `dates` layer is a
+    * separate span group that never reaches `ents`, so it is not
+    * computed here. Each value equals `annotate(text).ents`.
     */
   def entsCol(text: Column): Column = {
     val self = this
-    udf((s: String) => self.annotate(s).ents).apply(text)
+    udf((s: String) => self.core(s)._3).apply(text)
   }
 
   /** One row per entity: the "ents" converter

@@ -1,14 +1,34 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.exceptions.TestFailedDueToTimeoutException
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.Span
+import org.scalatest.time.SpanSugar._
 
 import graft.streaming.EventStreams
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TimeLimits {
   import TestSpark._
   import spark.implicits._
+
+  /** Interrupts a drive that overruns, so `failAfter` fails it. */
+  private implicit val signaler: Signaler = ThreadSignaler
+
+  /** Bound on one drive of a stream; the suite's drives take seconds. */
+  private val driveLimit: Span = 120.seconds
+
+  /** Process everything available, or fail this test by timeout: a hung
+    * stream must fail the test that drives it, not use up the suite's
+    * time budget.
+    */
+  private def drain(q: StreamingQuery, limit: Span = driveLimit): Unit =
+    failAfter(limit)(q.processAllAvailable())
 
   private lazy val streamDir: String = {
     // stage the batch events parquet as a file-stream source directory
@@ -22,8 +42,7 @@ class StreamingSpec extends AnyFunSuite {
       name: String, mode: String = "append"): org.apache.spark.sql.DataFrame = {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
+    try drain(q) finally q.stop()
     spark.table(name)
   }
 
@@ -38,6 +57,25 @@ class StreamingSpec extends AnyFunSuite {
     val f = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     Files.move(f.toPath, Paths.get(dir, s"$name.parquet"))
+  }
+
+  test("a hung stream fails its drive by timeout within the bound") {
+    // an injected hang: the sink blocks every micro-batch until released
+    val release = new CountDownLatch(1)
+    val q = EventStreams.readEvents(spark, streamDir).writeStream
+      .foreachBatch { (_: DataFrame, _: Long) =>
+        release.await(5, TimeUnit.MINUTES); ()
+      }
+      .start()
+    try {
+      val t0 = System.nanoTime()
+      intercept[TestFailedDueToTimeoutException](drain(q, 3.seconds))
+      val waited = (System.nanoTime() - t0) / 1e9
+      assert(waited >= 3 && waited < 30, s"drive returned after $waited s")
+    } finally {
+      release.countDown()
+      q.stop()
+    }
   }
 
   test("tumbling window counts match the batch computation") {
@@ -102,16 +140,16 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("sessbound")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       // batch 2: only users 0-9 stay active, 4h later — advances the
       // watermark to t0+2h once the batch completes
       addBatch(2, (0L until 10L).map(u => (u, t0 + 4 * h, 1.0)))
-      q.processAllAvailable()
+      drain(q)
       // batch 3: one event triggers timeout processing under the
       // advanced watermark — users 10-99 (timeout t0+30min < t0+2h)
       // must EMIT and be REMOVED from the store
       addBatch(3, Seq((0L, t0 + 8 * h, 1.0)))
-      q.processAllAvailable()
+      drain(q)
       val emitted = spark.table("sessbound")
       assert(emitted.filter($"session_start" ===
         new java.sql.Timestamp(t0 * 1000) && $"user_id" >= 10).count()
@@ -124,7 +162,7 @@ class StreamingSpec extends AnyFunSuite {
       // batch 4: a row 6h+ behind the watermark — dropped and COUNTED,
       // never absorbed into state
       addBatch(4, Seq((50L, t0, 9.0)))
-      q.processAllAvailable()
+      drain(q)
       val afterLate = q.recentProgress
         .filter(_.stateOperators.nonEmpty).last.stateOperators.head
       assert(afterLate.numRowsDroppedByWatermark >= 1L,
@@ -194,7 +232,7 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("attrouter")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       // matched pairs emit eagerly; unmatched clicks must NOT have
       // emitted yet — a view for users 5-9 could still arrive
       val eager = spark.table("attrouter").collect()
@@ -204,12 +242,12 @@ class StreamingSpec extends AnyFunSuite {
       // both sources jump far ahead: watermark passes the match horizon
       add(cDir, 2, cCols, Seq((900L, 0L, t0 + 8 * 3600)))
       add(vDir, 2, vCols, Seq((901L, 0L, t0 + 8 * 3600)))
-      q.processAllAvailable()
+      drain(q)
       // one more advance so the outer emission (tied to state cleanup)
       // lands in a completed batch
       add(cDir, 3, cCols, Seq((910L, 1L, t0 + 16 * 3600)))
       add(vDir, 3, vCols, Seq((911L, 1L, t0 + 16 * 3600)))
-      q.processAllAvailable()
+      drain(q)
       val rows = spark.table("attrouter").collect()
       val outer = rows.filter(r => r.isNullAt(3)).map(_.getLong(0)).toSet
       assert((5L until 10L).toSet.subsetOf(outer),
@@ -246,18 +284,18 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("attrbound")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       assert(spark.table("attrbound").count() === 50L)
       // batch 2: both sources jump 8h ahead (one row each) — the global
       // watermark passes every batch-1 row's match horizon
       add(cDir, 2, cCols, Seq((900L, 0L, t0 + 8 * h)))
       add(vDir, 2, vCols, Seq((901L, 0L, t0 + 8 * h)))
-      q.processAllAvailable()
+      drain(q)
       // batch 3: one more advance so eviction under the new watermark is
       // itself reflected in the final progress metrics
       add(cDir, 3, cCols, Seq((910L, 1L, t0 + 16 * h)))
       add(vDir, 3, vCols, Seq((911L, 1L, t0 + 16 * h)))
-      q.processAllAvailable()
+      drain(q)
       val st = q.recentProgress.filter(_.stateOperators.nonEmpty)
         .last.stateOperators.head
       assert(st.numRowsTotal <= 4L,
@@ -883,14 +921,14 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("funnelsteps")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       add(1, c2.toSeq)
-      q.processAllAvailable()
+      drain(q)
       val maxTs = typed.map(_._2.getTime).max
       add(9, Seq((-1L,
         new java.sql.Timestamp(maxTs + 10L * 3600 * 1000), 999999L,
         "error")))
-      q.processAllAvailable()
+      drain(q)
       val got = spark.table("funnelsteps").filter($"user_id" >= 0)
         .groupBy($"step").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -936,7 +974,7 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("transpairs")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       val batch = SparkEntry.queries("q115_transitions")(spark, sf)
         .collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n"))
@@ -945,12 +983,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(midway < batch.values.sum,
         "the tail of chunk 1 must still be buffered above the watermark")
       chunks.drop(1).zipWithIndex.foreach { case (c, i) =>
-        add(i + 1, c.toSeq); q.processAllAvailable()
+        add(i + 1, c.toSeq); drain(q)
       }
       val maxTs = typed.map(_._2.getTime).max
       add(9, Seq((-1L,
         new java.sql.Timestamp(maxTs + 10L * 3600 * 1000), 999999L, "view")))
-      q.processAllAvailable()
+      drain(q)
       val got = spark.table("transpairs").filter($"user_id" >= 0)
         .groupBy($"prev_type", $"next_type").count().collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("count"))
@@ -989,7 +1027,7 @@ class StreamingSpec extends AnyFunSuite {
       def recomputed = StatsMaintenance.recompute(
         spark.read.parquet(dir), "p", metrics)
         .as[(String, Long, Long)].collect().toSet
-      q.processAllAvailable()
+      drain(q)
       val afterTwo = maintained
       assert(afterTwo === recomputed)
       assert(!afterTwo.exists(_._1 == "c"),
@@ -999,7 +1037,7 @@ class StreamingSpec extends AnyFunSuite {
       MergeInto.mergeByKeyCdc(spark, dir,
         Seq((6L, "six", "d", false)).toDF("k", "v", "p", "_del"),
         "k", "p", deleteWhen = Some(col("_del")))
-      q.processAllAvailable()
+      drain(q)
       val afterThree = maintained
       assert(afterThree === recomputed)
       assert(afterThree.exists(_._1 == "d"),
@@ -1025,12 +1063,12 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(chunk1.schema).parquet(srcDir)
     val q = EventStreams.mergeStream(stream, tableDir, "k", "p")
     try {
-      q.processAllAvailable()
+      drain(q)
       assert(table() === Set((1L, "one", "a"), (2L, "two2", "a"),
         (3L, "three", "b"), (5L, "five", "b")))
       // second trigger: k=5 overwritten (last-writer-wins), k=6 lands
       stageChunk(srcDir, "batch1", chunk2)
-      q.processAllAvailable()
+      drain(q)
       val settled = table()
       assert(settled === Set((1L, "one", "a"), (2L, "two2", "a"),
         (3L, "three", "b"), (5L, "five2", "b"), (6L, "six", "c")))
@@ -1063,11 +1101,11 @@ class StreamingSpec extends AnyFunSuite {
     val q = EventStreams.versionedMergeStream(stream, tableDir,
       "k", "p", queryTag = "ingest")
     try {
-      q.processAllAvailable()
+      drain(q)
       assert(table() === Set((1L, "one", "a"), (2L, "two2", "a"),
         (3L, "three", "b"), (5L, "five", "b")))
       stageChunk(srcDir, "batch1", chunk2)
-      q.processAllAvailable()
+      drain(q)
       val settled = table()
       assert(settled === Set((1L, "one", "a"), (2L, "two2", "a"),
         (3L, "three", "b"), (5L, "five2", "b"), (6L, "six", "c")))
