@@ -100,12 +100,12 @@ object PipelineQueries {
     }
   })
 
-  /** Verified near-dup pairs — the shared q32/q69 pipeline (and the
-    * ProfCc profiling target): fused MinHash signatures -> LSH banding
-    * (16 bands / 64 mins) -> candidate equi-join -> EXACT shingle
-    * Jaccard verification, keeping pairs with round(J, 4) >= threshold.
-    * One definition so the declared query, the cluster query built on
-    * it, and the profiler can never drift apart.
+  /** Verified near-dup pairs — the shared q32/q69 pipeline: fused MinHash
+    * signatures -> LSH banding (16 bands / 64 mins) -> candidate
+    * equi-join -> EXACT shingle Jaccard verification, keeping pairs with
+    * round(J, 4) >= threshold.
+    * One definition so the declared query and the cluster query built
+    * on it can never drift apart.
     */
   private[graft] def verifiedNearDupPairs(s: SparkSession, d: String,
       threshold: Double = 0.8): DataFrame =
@@ -838,8 +838,9 @@ object PipelineQueries {
       // appears four times across the pairs/dropped branches — without
       // the persist each occurrence re-scans the parquet sample and
       // recomputes signatures)
-      // COST FLOOR, measured (BenchOne, quiet local[32], sf0.1): the
-      // r6 0.5 s target is not reachable for this plan shape — with
+      // COST FLOOR, measured (median of warm reps in one session, quiet
+      // local[32], sf0.1): the r6 0.5 s target is not reachable for this
+      // plan shape — with
       // one action, one shuffle partition, AQE off, and the cache, the
       // median is ~0.7 s and is all FIXED per-rep overhead (driver
       // analysis/optimization of the 5-operator plan + 3 stage rounds
@@ -1015,8 +1016,9 @@ object PipelineQueries {
       // no driver-side graph (Dedup.connectedComponents). The oracle
       // recomputes the clusters independently via a recursive CTE over
       // the exact-Jaccard pair set.
-      // Cost structure (BenchOne, quiet local[32]/sf0.1): the q32 pair
-      // generation IS ~1.35 s of the ~2.6 s median; the component loop
+      // Cost structure (median of warm reps, quiet local[32]/sf0.1): the
+      // q32 pair generation IS ~1.35 s of the ~2.6 s median; the
+      // component loop
       // adds ONE fused job per star round (pair gen + round + star-
       // forest convergence test fuse via lazy localCheckpoint; near-dup
       // graphs converge in 1 round) plus the mapping/size join — fixed
@@ -1261,7 +1263,7 @@ object PipelineQueries {
       // The declared query rebuilds the index each run (honest
       // build+probe cost); a deployment builds once and probes many.
       // Path is per-(sf, pid) for the same concurrency reason as q76.
-      // COST FLOOR (BenchOne, quiet local[32], sf0.1): ~4.2 s median,
+      // COST FLOOR (median of warm reps, quiet local[32], sf0.1): ~4.2 s,
       // dominated by the three partitioned-write ACTIONS of the build
       // (postings, terms, stats — committer renames + per-action plan/
       // codegen), not by data volume; the probe alone is sub-second.

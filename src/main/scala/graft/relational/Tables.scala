@@ -26,16 +26,23 @@ object Tables {
     * read nanos as long via `nanosAsLong` and integer-divide; a double
     * division would lose precision above 2^53 ns), untagged micros (Spark
     * ≥3.4 reads as TIMESTAMP_NTZ — cast to TimestampType; session tz is
-    * pinned UTC in Verify/Bench so the cast is a pure re-tag), and
-    * UTC-tagged micros (already TimestampType). Normalize all three to a
-    * session-tz TimestampType so every downstream query (`unix_micros`,
+    * pinned UTC by `graft.Sessions.local`, so the cast is a pure re-tag),
+    * and UTC-tagged micros (already TimestampType). Normalize all three to
+    * a session-tz TimestampType so every downstream query (`unix_micros`,
     * windows, watermarks) sees one type regardless of data generation.
     */
   def events(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    eventsTs(table(s, d, "events"))
+  }
+  /** The `ts` normalization of [[events]], shared with the streaming
+    * reader (`EventStreams.readEvents`): `raw` must have been read with
+    * `nanosAsLong` set. Batch or streaming, the plan is a single
+    * projection of `ts` (none when it is already TimestampType).
+    */
+  def eventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => // nanos-as-long (legacy TIMESTAMP(NANOS) layout)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -243,38 +243,18 @@ object Ann {
     */
   private[similarity] def fitQuantizer(corpus: DataFrame, nlist: Int,
       seed: Long, sampleSize: Int, targetCell: Int): Array[Array[Double]] = {
-    // Derived cell count (nlist <= 0): ONE bounded collect answers both
-    // the corpus-size question and (usually) the sample question —
-    // r19, guide §1.2: the old shape ran a count() job AND a limit()
-    // collect job per fit, and the fit phase of the index builds is
-    // job-count bound at small scale. limit(fitProbeCap) either comes
-    // back short (the corpus IS the sample and its length IS the
-    // count — zero extra jobs) or full, in which case the count() job
-    // still runs but the sample is the already-collected prefix
-    // whenever it is long enough (limit(n) of the same frame is a
-    // prefix of limit(cap): GlobalLimit concatenates partitions in
-    // order). limit() pulls from the first partitions — fine for a
-    // coarse quantizer (its only job is to partition space); swap in a
-    // seeded Bernoulli sample if corpus order were adversarial.
-    val fitProbeCap = 16384
-    lazy val firstN: Array[Array[Double]] = corpus.select(col("vec"))
-      .limit(fitProbeCap).collect()
-      .map(_.getSeq[Double](0).toArray)
     val cells =
       if (nlist > 0) nlist
-      else {
-        val cnt = if (firstN.length < fitProbeCap) firstN.length.toLong
-                  else corpus.count()
-        math.min(1 << 20, math.max(16,
-          math.ceil(cnt.toDouble / targetCell).toInt))
-      }
+      else math.min(1 << 20, math.max(16,
+        math.ceil(corpus.count().toDouble / targetCell).toInt))
     if (cells > 4096) return fitCentersDistributed(corpus, cells, seed)
     val sz = if (sampleSize > 0) sampleSize else math.max(cells * 64, 1024)
-    val sample: Array[Array[Double]] =
-      if (nlist <= 0 && (sz <= firstN.length || firstN.length < fitProbeCap))
-        firstN.take(sz)
-      else corpus.select(col("vec")).limit(sz).collect()
-        .map(_.getSeq[Double](0).toArray)
+    // limit() pulls from the first partitions — fine for a coarse
+    // quantizer (its only job is to partition space); swap in a seeded
+    // Bernoulli sample if corpus order were adversarial.
+    val sample: Array[Array[Double]] = corpus.select(col("vec"))
+      .limit(sz).collect()
+      .map(_.getSeq[Double](0).toArray)
     fitCentersLocal(sample, cells, seed)
   }
 

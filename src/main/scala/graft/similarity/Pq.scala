@@ -178,20 +178,13 @@ object Pq {
       targetCell: Int = 128): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // the two fits are INDEPENDENT (each collects its own bounded
-    // sample and runs a driver-side k-means) — overlap their Spark
-    // jobs and their driver CPU (guide §2.6; r19). Par.run joins both
-    // branches before use, so the writes below see fully-built fits.
-    var centers: Array[Array[Double]] = null
-    var codebooks: Array[Array[Array[Double]]] = null
-    graft.core.Par.run(
-      () => { centers = Ann.fitQuantizer(corpus, nlist, seed,
-        sampleSize = 0, targetCell = targetCell) },
-      () => { codebooks = fitCodebooks(corpus, dim, m, ksub, seed) })
+    val centers = Ann.fitQuantizer(corpus, nlist, seed,
+      sampleSize = 0, targetCell = targetCell)
+    val codebooks = fitCodebooks(corpus, dim, m, ksub, seed)
     // the three artifacts are independent once the fits exist — land
     // them concurrently (graft.core.Par) so the two tiny fit-artifact
     // writes hide behind the code encode+shuffle instead of adding two
-    // sequential commit rounds
+    // sequential commit rounds (NOTES_r11: q105 3.9 → 3.0 s)
     graft.core.Par.run(
       () => centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid")
@@ -336,13 +329,9 @@ object Pq {
   def ivfpqTopK(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
       nlist: Int = 0, nprobe: Int = 3, m: Int = 4, ksub: Int = 256,
       seed: Long = 42L, targetCell: Int = 128): DataFrame = {
-    // independent fits — overlap them (guide §2.6), same as buildPqIndex
-    var centers: Array[Array[Double]] = null
-    var codebooks: Array[Array[Array[Double]]] = null
-    graft.core.Par.run(
-      () => { centers = Ann.fitQuantizer(corpus, nlist, seed,
-        sampleSize = 0, targetCell = targetCell) },
-      () => { codebooks = fitCodebooks(corpus, dim, m, ksub, seed) })
+    val centers = Ann.fitQuantizer(corpus, nlist, seed,
+      sampleSize = 0, targetCell = targetCell)
+    val codebooks = fitCodebooks(corpus, dim, m, ksub, seed)
     val adc = new AdcScorer(codebooks)
     val cs = corpus.select(col("id").as("neighbor_id"),
       encodeUdf(codebooks)(col("vec")).as("code"),

@@ -29,20 +29,14 @@ object EventStreams {
     * TIMESTAMP_NTZ, UTC micros). Probe the directory with a one-off batch
     * read (footer-only — no data scanned) and derive both the stream
     * schema and the unit conversion from what is actually on disk, the
-    * same normalization as the batch loader (`Tables.events`): every
+    * same normalization as the batch loader (`Tables.eventsTs`): every
     * downstream watermark/window sees a session-tz TimestampType.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val onDisk = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(onDisk).parquet(dir)
-    onDisk("ts").dataType match {
-      case LongType => // nanos-as-long (legacy TIMESTAMP(NANOS) layout)
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => // untagged micros
-        stream.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => stream // already TimestampType
-    }
+    graft.relational.Tables.eventsTs(
+      spark.readStream.schema(onDisk).parquet(dir))
   }
 
   /** Tumbling-window counts/sums per event type with late-data handling. */

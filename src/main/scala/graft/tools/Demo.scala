@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Example entrypoint driving the IO sources and streaming operators
   * through the public API: BRAT standoff round-trip, CoNLL-U read, and a
   * streaming sessionization run over a staged events directory.
@@ -11,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val Array(bratDir, eventsDir, conllGlob) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     import spark.implicits._
 
     val docs = graft.io.Standoff.read(spark, bratDir)

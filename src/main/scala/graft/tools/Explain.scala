@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for selected queries — the plan-review
   * loop: check parquet pushdown (PushedFilters/ReadSchema), broadcast
   * joins on dimensions, exchange reuse, and WholeStageCodegen spans.
@@ -13,12 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q5_nation_revenue", "q1_pricing_summary", "q16_sessionize")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       println(graft.SparkEntry.queries(n)(spark, sfDir)

@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Example: the clinical extraction pipes over an in-memory French note —
   * sections, tables, reason, consultation dates, history qualifier.
   * Usage: sbt "runMain graft.tools.PipesDemo"
   */
 object PipesDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .appName("graft-pipes-demo")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(2)
     import spark.implicits._
     import graft.nlp._
     import graft.pipes._

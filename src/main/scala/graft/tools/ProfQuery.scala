@@ -1,13 +1,14 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
-/** Dev-only per-query profiler: run named queries in a warmed session
-  * with a listener that prints, for every Spark job, its wall time and
-  * per-stage task-time / shuffle-bytes breakdown — the "where inside
-  * this query do the seconds go" view the bench medians cannot give.
+/** Dev-only per-query profiler and micro-bench: run named queries (exact
+  * names or prefixes) over several reps in one warmed session, print
+  * each query's median wall time over the reps, and, for the last rep,
+  * a listener's view of every Spark job's wall time and per-stage
+  * task-time / shuffle-bytes breakdown — the "where inside this query
+  * do the seconds go" view the bench medians cannot give.
   *
   * Usage: runMain graft.tools.ProfQuery <sfDir> <name>[,<name>...] [reps]
   */
@@ -28,19 +29,10 @@ object ProfQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val wanted = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val picked = graft.SparkEntry.queries
-      .filter { case (k, _) => wanted.exists(k.startsWith) }
-    require(picked.nonEmpty, s"no query matches: ${args(1)}")
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .appName("prof-query").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "65536"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val reps = if (args.length > 2) args(2).toInt else 3
+    val picked = graft.Verify.select(graft.SparkEntry.queries, args(1))
+    val spark = graft.Sessions.local(
+      math.min(32, Runtime.getRuntime.availableProcessors))
     spark.range(2000000L).selectExpr("max(id * 2 + 1)").collect()
 
     val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
@@ -82,7 +74,7 @@ object ProfQuery {
 
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
     picked.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      (1 to reps).foreach { rep =>
+      val walls = (1 to reps).map { rep =>
         stages.clear(); jobStages.clear(); jobEnd.clear()
         enabled = rep == reps // profile the LAST (warmed) rep
         val t0 = System.nanoTime()
@@ -108,7 +100,10 @@ object ProfQuery {
         } else {
           println(f"  (warm) $name rep=$rep wall=$wall%.3f s")
         }
+        wall
       }
+      println(f"MEDIAN $name median=${walls.sorted.apply(reps / 2)}%.3f " +
+        s"reps=${walls.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-pattern pollution-regex cost on the real corpus (dev tool).
   * Iterates the LIVE bank (`Normalizer.defaultPollutionBank`) so the
   * numbers always describe the shipped patterns, and honours each
@@ -11,10 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ProfRegex {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("prof-regex").config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     val sample = graft.relational.Tables.documents(spark, sfDir)
       .select("text").limit(2000).collect().map(_.getString(0))
     graft.nlp.Normalizer.defaultPollutionBank.foreach { g =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe for the state-v2 TTL dedup (not part of the declared
@@ -10,15 +9,11 @@ import org.apache.spark.sql.functions._
   */
 object TtlDebug {
   def main(args: Array[String]): Unit = {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = graft.Sessions.local(2)
+    // transformWithState needs the RocksDB state store (a runtime conf)
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
     import s2.implicits._
     val dir = Files.createTempDirectory("ttl-dedup").toString
     def add(i: Int, rows: Seq[(Long, Long, Long, String)]): Unit = {

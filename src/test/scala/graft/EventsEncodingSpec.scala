@@ -15,7 +15,7 @@ import graft.streaming.EventStreams
   * `EventStreams.readEvents` normalize ALL of them to identical results,
   * batch (q14/q16) and streaming (tumbling counts) alike.
   */
-class EventsEncodingSpec extends AnyFunSuite {
+class EventsEncodingSpec extends AnyFunSuite with StreamDrain {
   import TestSpark._
   import spark.implicits._
 
@@ -65,7 +65,7 @@ class EventsEncodingSpec extends AnyFunSuite {
       val q = EventStreams.tumblingCounts(ev, "1 hour", "0 seconds")
         .writeStream.format("memory").queryName(s"enc_$enc")
         .outputMode("append").start()
-      q.processAllAvailable()
+      drain(q)
       q.stop()
       enc -> spark.table(s"enc_$enc").collect().map(_.toString).sorted.toSeq
     }

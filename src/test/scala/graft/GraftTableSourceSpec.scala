@@ -15,7 +15,7 @@ import graft.io.{KeyBloom, Manifest, VersionLog, ZOrder}
   * the FileIndex — asserted on the executed scan's numFiles metric,
   * so "pruned" means the files were never opened, not filtered later.
   */
-class GraftTableSourceSpec extends AnyFunSuite {
+class GraftTableSourceSpec extends AnyFunSuite with StreamDrain {
   import TestSpark._
 
   /** numFiles actually read by the (executed) parquet scans of df.
@@ -309,7 +309,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("gtail")
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       def got() = spark.table("gtail")
         .select($"version", $"action", $"file")
         .as[(Long, String, String)].collect().toSeq
@@ -319,12 +319,12 @@ class GraftTableSourceSpec extends AnyFunSuite {
       // an uncommitted orphan batch dir must NOT stream
       Seq((99L, "z")).toDF("k", "p")
         .write.partitionBy("p").parquet(s"$dir/data/b-00000099-orphan")
-      q.processAllAvailable()
+      drain(q)
       assert(got() === afterInit, "uncommitted files must not stream")
       // an append commit streams exactly its added files, once
       VersionLog.append(spark, dir, Seq((3L, "a")).toDF("k", "p"),
         partitionBy = Some("p"))
-      q.processAllAvailable()
+      drain(q)
       val afterAppend = got()
       val newRows = afterAppend.filterNot(afterInit.contains)
       assert(newRows.nonEmpty && newRows.forall(r =>
@@ -357,7 +357,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
     VersionLog.append(spark, dir, Seq((2L, "a")).toDF("k", "p"),
       partitionBy = Some("p"))
     val seen = new scala.collection.mutable.ArrayBuffer[Seq[Long]]
-    def drain(): Unit = {
+    def drainBacklog(): Unit = {
       val q = spark.readStream.format("graft-versions")
         .option("maxBatchesPerTrigger", "1").load(dir)
         .writeStream
@@ -368,10 +368,10 @@ class GraftTableSourceSpec extends AnyFunSuite {
           ()
         }
         .option("checkpointLocation", ckpt).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      try drain(q) finally q.stop()
     }
     // a 2-commit backlog drains as one VERSION per micro-batch
-    drain()
+    drainBacklog()
     assert(seen.synchronized(seen.toSeq) === Seq(Seq(1L), Seq(2L)),
       s"got ${seen.toSeq}")
     // two more commits while the consumer is down; the restart
@@ -381,7 +381,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       partitionBy = Some("p"))
     VersionLog.append(spark, dir, Seq((4L, "a")).toDF("k", "p"),
       partitionBy = Some("p"))
-    drain()
+    drainBacklog()
     assert(seen.synchronized(seen.toSeq) ===
       Seq(Seq(1L), Seq(2L), Seq(3L), Seq(4L)), s"got ${seen.toSeq}")
   }
@@ -422,7 +422,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt).outputMode("append").start()
     val q1 = startStream()
     try {
-      q1.processAllAvailable()
+      drain(q1)
       assert(sunk.synchronized(sunk.toSet) === Set(
         ("insert", 1L, 1L), ("insert", 2L, 1L), ("insert", 3L, 1L),
         ("update_pre", 2L, 2L), ("update_post", 2L, 2L),
@@ -446,7 +446,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
     // versions, with the append's and delete's images SYNTHESIZED
     val q2 = startStream()
     try {
-      q2.processAllAvailable()
+      drain(q2)
       val replay = sunk.synchronized(sunk.toSet)
       assert(replay === Set(
         ("update_pre", 4L, 3L), ("update_post", 4L, 3L),
@@ -516,7 +516,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt).outputMode("append").start()
     val q1 = startStream()
     try {
-      q1.processAllAvailable()
+      drain(q1)
       assert(sunk.synchronized(sunk.size) === 7) // 3 init + 4 merge
     } finally q1.stop()
     sunk.synchronized(sunk.clear())
@@ -532,7 +532,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
     // metadata-only commits contribute nothing), current names
     val q2 = startStream()
     try {
-      q2.processAllAvailable()
+      drain(q2)
       assert(sunk.synchronized(sunk.toSet) ===
         Set(("insert", 5L, 4L)),
         s"restart must deliver only v4's insert, got " +
@@ -599,7 +599,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
         Files.createTempDirectory("gcdc-widen-ck").toString)
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       assert(sunk.synchronized(sunk.toSet) ===
         Set((1, 10L), (2, 20L), (3, 5000000000L)))
     } finally q.stop()
@@ -640,7 +640,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
         Files.createTempDirectory("gcdc-sv-ck").toString)
       .outputMode("append").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       assert(sunk.synchronized(sunk.toSet) ===
         Set(("insert", 3L, 3L)),
         s"stream must start at v3, got ${sunk.synchronized(sunk.toSet)}")
@@ -728,7 +728,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       .outputMode("append")
       .start(dir)
     try {
-      q.processAllAvailable()
+      drain(q)
       // epoch 0 bootstrapped version 1 under its txn tag
       assert(VersionLog.listVersions(spark, dir) === Seq(1L))
       val snap1 = VersionLog.snapshot(spark, dir, None)
@@ -737,7 +737,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
         "partitionBy must reach the sink's layout")
       Seq((3L, "a")).toDF("k", "p")
         .coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
+      drain(q)
       assert(VersionLog.listVersions(spark, dir) === Seq(1L, 2L))
       assert(VersionLog.snapshot(spark, dir, None).action === s"$ckpt#1")
       assert(VersionLog.read(spark, dir).select($"k")
@@ -1321,7 +1321,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
       .start()
     try {
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
+        drain(q)
         q.awaitTermination(10000)
       }
     } finally {
@@ -1357,7 +1357,7 @@ class GraftTableSourceSpec extends AnyFunSuite {
         }
         .option("checkpointLocation", ck)
         .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      try drain(q) finally q.stop()
     }
     run("1") // consumes v1..v2, checkpoint committed through v2
     assert(sunk.synchronized(sunk.toSet) ===

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{Conll, Standoff}
 
-class IoSpec extends AnyFunSuite {
+class IoSpec extends AnyFunSuite with StreamDrain {
   import TestSpark._
 
   private def mkBratDir(): String = {
@@ -450,7 +450,7 @@ class IoSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("feedorphan")
       .outputMode("complete").start()
     try {
-      q.processAllAvailable()
+      drain(q)
       val delta = spark.table("feedorphan")
         .as[(String, Long, Long)].collect().toSet
       assert(delta === Set(("a", 1L, 2L)),

@@ -17,7 +17,7 @@ import graft.io.VersionLog
   * END of its parent struct (the rebuild's natural order, declared to
   * match); top-level renames keep their position as before.
   */
-class NestedSchemaEvolutionSpec extends AnyFunSuite {
+class NestedSchemaEvolutionSpec extends AnyFunSuite with StreamDrain {
   import TestSpark._
 
   private def seed(): String = {
@@ -381,7 +381,7 @@ class NestedSchemaEvolutionSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt).outputMode("append").start()
     val q1 = startStream()
     try {
-      q1.processAllAvailable()
+      drain(q1)
       assert(sunk.synchronized(sunk.size) === 4) // 2 init + pre/post
     } finally q1.stop()
     sunk.synchronized(sunk.clear())
@@ -394,7 +394,7 @@ class NestedSchemaEvolutionSpec extends AnyFunSuite {
     // only v4's insert arrives, under the CURRENT nested name
     val q2 = startStream()
     try {
-      q2.processAllAvailable()
+      drain(q2)
       assert(sunk.synchronized(sunk.toSet) === Set((3L, 30L, 4L)),
         s"restart across the nested rename must deliver v4's " +
           s"insert, got ${sunk.synchronized(sunk.toSet)}")

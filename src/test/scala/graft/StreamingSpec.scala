@@ -4,31 +4,15 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.exceptions.TestFailedDueToTimeoutException
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.Span
 import org.scalatest.time.SpanSugar._
 
 import graft.streaming.EventStreams
 
-class StreamingSpec extends AnyFunSuite with TimeLimits {
+class StreamingSpec extends AnyFunSuite with StreamDrain {
   import TestSpark._
   import spark.implicits._
-
-  /** Interrupts a drive that overruns, so `failAfter` fails it. */
-  private implicit val signaler: Signaler = ThreadSignaler
-
-  /** Bound on one drive of a stream; the suite's drives take seconds. */
-  private val driveLimit: Span = 120.seconds
-
-  /** Process everything available, or fail this test by timeout: a hung
-    * stream must fail the test that drives it, not use up the suite's
-    * time budget.
-    */
-  private def drain(q: StreamingQuery, limit: Span = driveLimit): Unit =
-    failAfter(limit)(q.processAllAvailable())
 
   private lazy val streamDir: String = {
     // stage the batch events parquet as a file-stream source directory

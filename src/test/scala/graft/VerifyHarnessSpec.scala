@@ -43,4 +43,26 @@ class VerifyHarnessSpec extends AnyFunSuite {
     assert(errors.isEmpty)
     assert(Files.readString(Paths.get(out, "errors.json")) == "{}")
   }
+
+  test("a name-prefix selection dumps exactly the picked queries and " +
+      "their oracle SQL; an unmatched name fails by name") {
+    val out = Files.createTempDirectory("verify-harness-pick").toString
+    val picked = Verify.select(SparkEntry.queries, "q1_, q10_")
+    val want = Set("q1_pricing_summary", "q10_anti_join")
+    assert(picked.keySet == want)
+    assert(Verify.dumpQueries(spark, sf, out, picked).isEmpty)
+    val dumped = new java.io.File(out).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(dumped == want)
+    val oracleJson = Files.readString(Paths.get(out, "oracle_sql.json"))
+    val oracleKeys = "\"(q[0-9]+[a-z]?_[a-z0-9_]+)\": ".r
+      .findAllMatchIn(oracleJson).map(_.group(1)).toSet
+    assert(oracleKeys == want)
+    assert(oracleJson.contains(
+      tools.JsonOut.q(SparkEntry.oracleSql("q10_anti_join"))))
+
+    val e = intercept[IllegalArgumentException](
+      Verify.select(SparkEntry.queries, "q9999_no_such_query"))
+    assert(e.getMessage.contains("q9999_no_such_query"))
+  }
 }
