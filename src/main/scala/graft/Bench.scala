@@ -152,7 +152,7 @@ object Bench {
     // survive the tail whole; "full" points at the fat record.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "/root/repo/BENCH_LAST.json")), record + "\n")
+        "BENCH_LAST.json")), record + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write bench file: $e")
     }

@@ -219,7 +219,8 @@ object SimHash {
       n: Int = 3, radius: Int = 3, nbits: Int = 60): DataFrame = {
     // the per-shingle MD5 walk is the pipeline's dominant CPU and runs
     // in the scan stage — spread a single-split corpus across the
-    // session's cores (no-op at real corpus sizes)
+    // session's cores (no-op at real corpus sizes; q33 1.11 → 0.59 s,
+    // OPTIMIZATION_r18)
     val fp = graft.core.Spread.cpuFloor(df.filter(col(textCol).isNotNull))
       .select(col(idCol).as("id"),
         simhashPortable(col(textCol), n, nbits).as("fp"))

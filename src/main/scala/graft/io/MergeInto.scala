@@ -314,6 +314,7 @@ object MergeInto {
     // that both only READ the intact target — run them concurrently
     // (core.Par); both complete before the publish mutates anything,
     // preserving the feed-lands-before-the-table-changes contract
+    // (q124 3.2 → 2.2 s, NOTES_r11)
     var feed: Option[DataFrame] = None
     val stageWrite: () => Unit = () =>
       merged.write.mode("overwrite").partitionBy(partCol)

@@ -1297,7 +1297,8 @@ object VersionLog {
     // the feed STAGING and the batch write are independent actions
     // that both only read pinned (immutable) files — run them
     // concurrently; both complete (invisibly) before the commit, and
-    // the feed publishes only once the commit CAS wins
+    // the feed publishes only once the commit CAS wins (q136's merge
+    // 1.70 → 1.51 s, CHANGES.md)
     var feedName: String = null
     var newFiles: Seq[String] = Nil
     graft.core.Par.run(

@@ -39,19 +39,6 @@ object DocQueries {
     precedingRegex = Seq.empty,
     termination = Seq("the"))
 
-  /** Spread a small scan across cores before a CPU-heavy row-local
-    * stage — ONLY when the source has fewer partitions than cores (a
-    * single small parquet file arrives as one input split). When the
-    * scan already has enough splits (the 100 TB case) this is the
-    * identity: no shuffle is inserted.
-    */
-  private[relational] def spread(
-      df: org.apache.spark.sql.DataFrame,
-      s: SparkSession): org.apache.spark.sql.DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q20_token_count" -> { (s, d) =>
       import s.implicits._
@@ -75,9 +62,10 @@ object DocQueries {
       val pipe = DocPipeline(terms = matchTerms)
       // annotate is CPU-heavy row-local work but the corpus parquet is a
       // single small file -> one input split; conditionally spread it
-      // across cores BEFORE the pipe ([[spread]] is the identity when
-      // the scan already has enough splits — the 100 TB case)
-      pipe.entsTable(spread(documents(s, d), s), "doc_id", "text")
+      // across cores BEFORE the pipe (identity when the scan already has
+      // enough splits; q22 1.04 → 0.76 s, CHANGES.md)
+      pipe.entsTable(graft.core.Spread.cpuFloor(documents(s, d)),
+          "doc_id", "text")
         .select($"doc_id", $"begin".as("start_char"), $"end".as("end_char"),
           $"label")
         .orderBy($"doc_id", $"start_char")
@@ -87,7 +75,9 @@ object DocQueries {
       val pipe = DocPipeline(
         terms = Map("join" -> Seq("join")),
         qualifiers = Seq(syntheticNegation))
-      pipe.entsTable(spread(documents(s, d), s), "doc_id", "text")
+      // spread the annotate as q22 does (q23 1.02 → 0.62 s, CHANGES.md)
+      pipe.entsTable(graft.core.Spread.cpuFloor(documents(s, d)),
+          "doc_id", "text")
         .select($"doc_id", $"begin".as("start_char"), $"negation")
         .orderBy($"doc_id", $"start_char")
     },
@@ -107,8 +97,9 @@ object DocQueries {
       val pipe = DocPipeline(
         terms = matchTerms,
         qualifiers = Seq(syntheticNegation))
+      // spread the annotate as q22 does (q65 1.01 → 0.59 s, CHANGES.md)
       val ents = pipe.entsTable(
-        spread(note, s), "note_id", "note_text")
+        graft.core.Spread.cpuFloor(note), "note_id", "note_text")
       graft.io.Omop
         .entsToNoteNlp(ents, "note_id", attrs = Seq("negation"),
           deterministicIds = true)

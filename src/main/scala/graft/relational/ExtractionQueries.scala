@@ -195,11 +195,11 @@ object ExtractionQueries {
           .when($"form" % 2 === 0,
             concat($"letter", $"num", lit("."), $"sub"))
           .otherwise(concat($"letter", $"num", $"sub"))
-      // spread: the single-file orders scan arrives as ONE split; the
-      // trie match is CPU-bound row-local work (identity at real scale)
-      DocQueries.spread(base
+      // not spread: the single-task trie match takes ~0.3 s, too
+      // little to pay for an exchange (q66 0.55 → 0.53 s, CHANGES.md)
+      base
         .withColumn("note_text",
-          concat(lit("Diagnostic retenu "), mention, lit(" confirme."))), s)
+          concat(lit("Diagnostic retenu "), mention, lit(" confirme.")))
         .select($"o_orderkey",
           explode(icdUdf($"note_text")).as("kb_id"))
         .orderBy($"o_orderkey")
@@ -234,11 +234,9 @@ object ExtractionQueries {
       val docs = documents(s, d)
       val pipe = DocPipeline(terms = Map(
         "spark" -> Seq("spark"), "join" -> Seq("join")))
-      // single-file corpus -> one input split; conditionally spread the
-      // CPU-heavy annotate across cores (identity at real scale, see
-      // DocQueries.spread)
-      val pred = pipe.entsTable(DocQueries.spread(docs, s),
-          "doc_id", "text")
+      // not spread: the annotate measured no win from it (q40
+      // 1.22 → 1.28 s, a wash, CHANGES.md)
+      val pred = pipe.entsTable(docs, "doc_id", "text")
         .select($"doc_id", $"begin", $"end", $"label")
       // gold offsets from our own split Generator: narrow 1->N with exact
       // char offsets — replaces a posexplode + per-doc window prefix-sum
@@ -311,8 +309,8 @@ object ExtractionQueries {
       // Scale shape: scan -> row-local UDF -> explode; the only shuffle
       // is the deterministic output ORDER BY. The full-pipe UDF costs
       // ~0.6 ms/doc, so the single-split scan MUST spread across cores
-      // before it (one core ran this in 5.9 s; spread, ~0.6 s) —
-      // identity at real scale where the scan has many splits.
+      // before it (q68 5.2 → 2.1 s on 4 cores, CHANGES.md) — identity
+      // at real scale where the scan has many splits.
       val notes = orders(s, d)
         .filter($"o_orderkey" % 15 === 0)
         .withColumn("d1", date_format(expr(
@@ -325,7 +323,7 @@ object ExtractionQueries {
           lit("Antecedents :\nasthme releve le "), $"d1",
           lit(".\nConclusion :\nasthme constate le "), $"d2",
           lit(".\nFin.")))
-      DocQueries.spread(notes, s)
+      graft.core.Spread.cpuFloor(notes)
         .select($"o_orderkey",
           explode(historyPipeUdf($"note_text",
             $"o_orderdate".cast("timestamp"))).as("h"))
@@ -363,7 +361,9 @@ object ExtractionQueries {
           when($"o_orderkey" % 7 === 0,
             "Le patient rapporte une migraine.")
             .otherwise("Le patient présente une migraine.")))
-      DocQueries.spread(notes, s)
+      // spread the single-split scan before the qualifier stack
+      // (q72 1.15 → 0.55 s, CHANGES.md)
+      graft.core.Spread.cpuFloor(notes)
         .select($"o_orderkey",
           explode(qualifierStackUdf($"note_text")).as("q"))
         .select($"o_orderkey", $"q._1".as("label"),

@@ -390,6 +390,7 @@ object Ann {
     // both artifacts are independent once the fit exists — land them
     // concurrently so the tiny centroid write hides behind the cell
     // assignment+write instead of adding a sequential commit round
+    // (q76 2.5 → 2.0 s, NOTES_r11)
     graft.core.Par.run(
       () => centers.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -450,15 +451,11 @@ object Ann {
       col("vec").as("qv"),
       explode(probeUdf(centers, nprobe)(col("vec"))).as("cell"))
     // one job yields the probed-cell set AND the probe-row count that
-    // gates the large-batch spread (same reasoning as Pq.probePqIndex:
-    // big batches pay the scoring on a single-split scan's one task;
-    // point lookups must not pay the exchange)
+    // gates the large-batch spread (q76 1.97 → 1.88 s, OPTIMIZATION_r18)
     val cellCounts = qs.groupBy(col("cell")).count().collect()
     val probed = cellCounts.map(_.getInt(0))
-    val qRows = cellCounts.map(_.getLong(1)).sum
-    val p = spark.sparkContext.defaultParallelism
-    val qsIn = if (qRows >= math.max(1024, 32L * p)) qs.repartition(p)
-               else qs
+    val qsIn =
+      graft.core.Spread.probeBatch(qs, cellCounts.map(_.getLong(1)).sum)
     val cs = spark.read.parquet(s"$indexDir/cells.parquet")
       .filter(col("cell").isin(probed.toSeq: _*))
       .select(col("id").as("neighbor_id"), col("vec").as("cv"),

@@ -261,20 +261,12 @@ object Pq {
       col("vec").as("qv"), adc.qnorm(col("vec")).as("qn"),
       explode(Ann.probeUdf(centers, nprobe)(col("vec"))).as("cell"))
     // one job yields BOTH the probed-cell set (the static pruning cut)
-    // and, for free, the probe-row count that gates the spread below
+    // and, for free, the probe-row count that gates the large-batch
+    // ADC-scoring spread (q105 4.0 → 3.0 s, OPTIMIZATION_r18)
     val cellCounts = qs.groupBy(col("cell")).count().collect()
     val probed = cellCounts.map(_.getInt(0))
-    val qRows = cellCounts.map(_.getLong(1)).sum
-    // a LARGE query batch makes the ADC scoring the probe's whole CPU,
-    // and with the KB-sized code side broadcast the scoring runs on
-    // the query scan's partitioning — ONE task on a single-split batch
-    // (measured 0.9-1.3 s at sf0.1). Spread big batches; leave online
-    // point lookups (small batches) alone — for them the exchange
-    // would cost more than it buys (measured +0.3 s on the q105p twin
-    // when applied unconditionally).
-    val p = spark.sparkContext.defaultParallelism
-    val qsIn = if (qRows >= math.max(1024, 32L * p)) qs.repartition(p)
-               else qs
+    val qsIn =
+      graft.core.Spread.probeBatch(qs, cellCounts.map(_.getLong(1)).sum)
     val cs = spark.read.parquet(s"$dir/codes.parquet")
       .filter(col("cell").isin(probed.toSeq: _*))
       .select(col("id").as("neighbor_id"), col("code"), col("cell"))

@@ -44,7 +44,7 @@ class EquivalenceSpec extends AnyFunSuite {
   }
 
   test("spread repartitions a single-file scan but not a multi-file one") {
-    // the conditional spread (DocQueries.spread) must insert its
+    // a query's conditional spread (Spread.cpuFloor) must insert its
     // round-robin exchange ONLY when the scan arrives under-split (one
     // small parquet file); a fragmented source (the 100 TB case) must
     // pass through untouched

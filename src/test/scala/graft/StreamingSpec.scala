@@ -782,21 +782,14 @@ class StreamingSpec extends AnyFunSuite with StreamDrain {
 
   test("state-v2 TTL dedup (transformWithState) keeps first occurrence " +
       "only, across micro-batches, under RocksDB") {
-    // transformWithState needs the RocksDB provider — its own session
-    val prior = org.apache.spark.sql.SparkSession.getActiveSession
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .getOrCreate()
+    // transformWithState needs the RocksDB state store: a runtime conf
+    // on the shared session, restored afterwards
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val priorProvider = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
     try {
-      import s2.implicits._
       val dir = Files.createTempDirectory("ttl-dedup").toString
       def add(i: Int, rows: Seq[(Long, Long, Long, String)]): Unit =
         stageChunk(dir, s"b$i",
@@ -807,7 +800,7 @@ class StreamingSpec extends AnyFunSuite with StreamDrain {
       // batch 1: ids 1,2,3 with 2 duplicated IN batch
       add(0, Seq((1L, 10L, 1L, "view"), (2L, 11L, 2L, "view"),
         (2L, 11L, 2L, "view"), (3L, 12L, 3L, "click")))
-      val stream = s2.readStream
+      val stream = spark.readStream
         .schema("user_id LONG, ts TIMESTAMP, event_id LONG, " +
           "event_type STRING")
         .parquet(dir)
@@ -821,7 +814,7 @@ class StreamingSpec extends AnyFunSuite with StreamDrain {
         // state" batches (diagnosed via query status) — poll the sink
         def awaitRows(n: Long): Unit = {
           val deadline = System.nanoTime() + 90L * 1000000000L
-          while (s2.table("ttldedup").count() < n &&
+          while (spark.table("ttldedup").count() < n &&
             System.nanoTime() < deadline) Thread.sleep(200)
         }
         awaitRows(3)
@@ -830,7 +823,7 @@ class StreamingSpec extends AnyFunSuite with StreamDrain {
           (4L, 22L, 4L, "signup")))
         awaitRows(4)
         Thread.sleep(2000) // would catch late duplicate emissions
-        val got = s2.table("ttldedup").collect()
+        val got = spark.table("ttldedup").collect()
           .map(r => r.getAs[Long]("event_id")).sorted.toSeq
         assert(got === Seq(1L, 2L, 3L, 4L),
           "exactly one row per event_id, first occurrence wins")
@@ -838,16 +831,9 @@ class StreamingSpec extends AnyFunSuite with StreamDrain {
           .last.stateOperators.head
         assert(st.numRowsTotal <= 4L, "state is one value per key")
       } finally q.stop()
-    } finally {
-      // do NOT s2.stop(): the SparkContext is JVM-shared — stopping it
-      // here killed every later streaming suite (caught in the full run;
-      // the extended-session specs all follow this clear/restore shape)
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      prior.foreach { s =>
-        org.apache.spark.sql.SparkSession.setActiveSession(s)
-        org.apache.spark.sql.SparkSession.setDefaultSession(s)
-      }
+    } finally priorProvider match {
+      case Some(v) => spark.conf.set(providerKey, v)
+      case None    => spark.conf.unset(providerKey)
     }
   }
 
