@@ -1,6 +1,5 @@
 package graft.nlp
 
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** Multi-term exact matcher over the token stream, the Spark-side
@@ -18,40 +17,56 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class PhraseMatcher private (
     root: PhraseMatcher.Node,
+    labelNames: Array[String],
     attrNorm: Boolean) extends Serializable {
   import PhraseMatcher._
 
-  def findMatches(tokens: Array[Token], text: String): Seq[Ent] = {
+  /** Every trie hit, in walk order: by first token, then by last token,
+    * then in the node's label order (the reverse of the build order).
+    * Hit `h` spans tokens `first(h)..last(h)` and carries the label id
+    * `label(h)`, the label's position in the build's term list.
+    */
+  private[nlp] def walk(tokens: Array[Token]): Hits = {
     // visible = indices of matchable tokens, in order
-    val visible = new ArrayBuffer[Int](tokens.length)
+    val visible = new Array[Int](tokens.length)
+    var nv = 0
     var i = 0
     while (i < tokens.length) {
       val t = tokens(i)
-      if (!t.excluded && !Normalizer.isSpace(t)) visible += i
+      if (!t.excluded && !Normalizer.isSpace(t)) { visible(nv) = i; nv += 1 }
       i += 1
     }
-    val out = new ArrayBuffer[Ent]
+    val hits = new Hits
     var s = 0
-    while (s < visible.length) {
+    while (s < nv) {
       var node = root
       var j = s
-      var broke = false
-      while (j < visible.length && !broke) {
+      while (j < nv && node != null) {
         val tok = tokens(visible(j))
-        val key = if (attrNorm) tok.norm else tok.text
-        node.children.get(key) match {
-          case Some(next) =>
-            next.labels.foreach { lab =>
-              val b = tokens(visible(s)).begin
-              val e = tok.end
-              out += Ent(b, e, lab, safeSlice(text, b, e))
-            }
-            node = next
-            j += 1
-          case None => broke = true
+        node = node.children.get(if (attrNorm) tok.norm else tok.text)
+        if (node != null) {
+          var k = 0
+          while (k < node.labels.length) {
+            hits.add(visible(s), visible(j), node.labels(k))
+            k += 1
+          }
+          j += 1
         }
       }
       s += 1
+    }
+    hits
+  }
+
+  def findMatches(tokens: Array[Token], text: String): Seq[Ent] = {
+    val hits = walk(tokens)
+    val out = new ArrayBuffer[Ent](hits.size)
+    var h = 0
+    while (h < hits.size) {
+      val b = tokens(hits.first(h)).begin
+      val e = tokens(hits.last(h)).end
+      out += Ent(b, e, labelNames(hits.label(h)), safeSlice(text, b, e))
+      h += 1
     }
     out.toSeq
   }
@@ -59,11 +74,31 @@ final class PhraseMatcher private (
 
 object PhraseMatcher {
   private[nlp] final class Node extends Serializable {
-    val children: mutable.HashMap[String, Node] = mutable.HashMap.empty
-    var labels: List[String] = Nil
+    val children = new java.util.HashMap[String, Node]
+    var labels: Array[Int] = Array.emptyIntArray
   }
 
-  private def safeSlice(text: String, b: Int, e: Int): String =
+  /** Growable (first token, last token, label id) triples. */
+  private[nlp] final class Hits {
+    var size = 0
+    var first = new Array[Int](16)
+    var last = new Array[Int](16)
+    var label = new Array[Int](16)
+
+    def add(f: Int, l: Int, lab: Int): Unit = {
+      if (size == first.length) {
+        first = java.util.Arrays.copyOf(first, size * 2)
+        last = java.util.Arrays.copyOf(last, size * 2)
+        label = java.util.Arrays.copyOf(label, size * 2)
+      }
+      first(size) = f
+      last(size) = l
+      label(size) = lab
+      size += 1
+    }
+  }
+
+  private[nlp] def safeSlice(text: String, b: Int, e: Int): String =
     if (text == null || b < 0 || e > text.length) "" else text.substring(b, e)
 
   /** Build from label -> terms. Terms are tokenized and normalized with the
@@ -73,9 +108,19 @@ object PhraseMatcher {
   def build(
       terms: Map[String, Seq[String]],
       attrNorm: Boolean = true,
-      normOpts: Normalizer.Options = Normalizer.Options()): PhraseMatcher = {
+      normOpts: Normalizer.Options = Normalizer.Options()): PhraseMatcher =
+    buildLabelled(terms.toSeq, attrNorm, normOpts)
+
+  /** Build from (label, terms) pairs; label id `i` is the `i`-th pair, so
+    * two pairs may share a label name and still be told apart by
+    * [[PhraseMatcher.walk]].
+    */
+  private[nlp] def buildLabelled(
+      terms: Seq[(String, Seq[String])],
+      attrNorm: Boolean,
+      normOpts: Normalizer.Options): PhraseMatcher = {
     val root = new Node
-    terms.foreach { case (label, termList) =>
+    terms.iterator.zipWithIndex.foreach { case ((_, termList), id) =>
       termList.foreach { term =>
         val toks = Normalizer
           .normalize(term, Tokenizer.tokenize(term), normOpts)
@@ -84,12 +129,12 @@ object PhraseMatcher {
           var node = root
           toks.foreach { t =>
             val key = if (attrNorm) t.norm else t.text
-            node = node.children.getOrElseUpdate(key, new Node)
+            node = node.children.computeIfAbsent(key, _ => new Node)
           }
-          node.labels ::= label
+          node.labels = id +: node.labels
         }
       }
     }
-    new PhraseMatcher(root, attrNorm)
+    new PhraseMatcher(root, terms.map(_._1).toArray, attrNorm)
   }
 }

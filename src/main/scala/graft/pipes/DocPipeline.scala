@@ -46,33 +46,44 @@ case class DocPipeline(
   @transient private lazy val regexMatcher =
     if (regexPatterns.nonEmpty) Some(RegexMatcher.build(regexPatterns))
     else None
-  @transient private lazy val ruleQualifiers =
-    qualifiers.map(new RuleQualifier(_))
+  @transient private lazy val qualifier = new RuleQualifier(qualifiers)
+  @transient private lazy val entsUdf = {
+    val self = this
+    udf((s: String) => self.entFlags(s))
+  }
 
   /** Pure per-document run — also the single-doc `nlp(text)` entry point
     * (`/root/reference/edsnlp/core/pipeline.py:373-400`).
     */
   def annotate(text: String): Annotations = {
-    val (tokens, sents, ents) = core(text)
+    val (tokens, sents, ents, flags) = core(text)
     val dateSpans = dates match {
       case Some(o) => Dates.extract(text, None, faithful = o.faithful)
       case None => Nil
     }
-    Annotations(tokens.toSeq, sents.toSeq, ents, dateSpans)
+    Annotations(tokens.toSeq, sents.toSeq, qualifier.withFlags(ents, flags),
+      dateSpans)
   }
 
-  /** The entity chain without the `dates` layer: tokens, sentences and
-    * qualified entities.
+  /** The entity chain without the `dates` layer: tokens, sentences,
+    * entities and, per entity, one flag per qualifier.
     */
-  private def core(text: String): (Array[Token], Array[Sent], Seq[Ent]) = {
+  private def core(text: String)
+      : (Array[Token], Array[Sent], Seq[Ent], Array[Array[Boolean]]) = {
     val tokens = Normalizer.normalize(text, Tokenizer.tokenize(text), normOpts)
     val sents = Sentencizer.sentences(tokens)
     val rawEnts =
       phraseMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil) ++
         regexMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil)
-    var ents = SpanAlgebra.filterSpans(rawEnts)
-    ruleQualifiers.foreach { q => ents = q.apply(text, tokens, sents, ents) }
-    (tokens, sents, ents)
+    val ents = SpanAlgebra.filterSpans(rawEnts)
+    (tokens, sents, ents, qualifier.flags(text, tokens, sents, ents))
+  }
+
+  private def entFlags(text: String): Seq[EntFlags] = {
+    val (_, _, ents, flags) = core(text)
+    ents.iterator.zip(flags.iterator).map { case (e, f) =>
+      EntFlags(e.begin, e.end, e.label, e.text, f)
+    }.toSeq
   }
 
   /** Add an `anno` struct column (tokens/sents/ents) to `df`. */
@@ -87,25 +98,30 @@ case class DocPipeline(
     * the dominant cost of the ents path, not the NLP itself. For the
     * same reason it runs only the entity chain: the `dates` layer is a
     * separate span group that never reaches `ents`, so it is not
-    * computed here. Each value equals `annotate(text).ents`.
+    * computed here. Each value holds the span, label and text of
+    * `annotate(text).ents`, with the qualifier attrs as one boolean per
+    * qualifier (`flags`, in `qualifiers` order) instead of a string map.
+    * The UDF is built once per pipeline.
     */
-  def entsCol(text: Column): Column = {
-    val self = this
-    udf((s: String) => self.core(s)._3).apply(text)
-  }
+  def entsCol(text: Column): Column = entsUdf(text)
 
   /** One row per entity: the "ents" converter
     * (`/root/reference/edsnlp/data/converters.py:651-711`) — relational
     * UNNEST of the annotation layer, with qualifier attrs as typed columns.
     */
   def entsTable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val attrCols = qualifiers.map(q =>
-      coalesce(element_at(col("ent.attrs"), q.name), lit("false"))
-        .cast("boolean").as(q.name))
+    val flagCols = qualifiers.indices.map(i =>
+      col("ent.flags").getItem(i).as(qualifiers(i).name))
     df.withColumn("ent", explode(entsCol(col(textCol))))
       .select(
         Seq(col(idCol), col("ent.begin").as("begin"),
           col("ent.end").as("end"), col("ent.label").as("label"),
-          col("ent.text").as("lexical_variant")) ++ attrCols: _*)
+          col("ent.text").as("lexical_variant")) ++ flagCols: _*)
   }
 }
+
+/** One entity of [[DocPipeline.entsCol]]: its span, label and text, and
+  * one flag per qualifier of the pipeline, in its order.
+  */
+case class EntFlags(
+    begin: Int, end: Int, label: String, text: String, flags: Array[Boolean])

@@ -148,6 +148,9 @@ object ConsultationDates {
   * past but mark identity lines, not antecedents.
   */
 object History {
+  private lazy val cueQualifier =
+    new graft.nlp.RuleQualifier(graft.nlp.Patterns.history)
+
   def qualify(
       text: String,
       tokens: Array[Token],
@@ -158,8 +161,7 @@ object History {
       historyLimitDays: Int = 365,
       birthDatetime: Option[java.time.LocalDateTime] = None,
       excludeBirthdate: Boolean = true): Seq[Ent] = {
-    val cueBased = new graft.nlp.RuleQualifier(graft.nlp.Patterns.history)
-      .qualify(text, tokens, sents, ents)
+    val cueBased = cueQualifier.qualify(text, tokens, sents, ents)
     val atcdSections = sections.filter(s =>
       s.label == "antecedents" || s.label == "antecedents_familiaux")
     val dates = Dates.extract(text, noteDatetime)

@@ -80,32 +80,30 @@ object ExtractionQueries {
 
   /** The full qualifier stack in one row-local pass: normalize/tokenize
     * -> sentences -> phrase matcher (four disorder terms) -> ALL FOUR
-    * rule qualifiers (negation, hypothesis, family, reported speech —
-    * the reference's `qualifiers/` package run together, as the OMOP
-    * note_nlp export does) — each entity emitted with every flag. The
-    * hypothesis/family/reported-speech banks are golden-spec'd in
-    * isolation; this is their composed, oracle-checked surface.
+    * rule qualifiers in one engine (negation, hypothesis, family,
+    * reported speech — the reference's `qualifiers/` package run
+    * together, as the OMOP note_nlp export does) — each entity emitted
+    * with every flag. The hypothesis/family/reported-speech banks are
+    * golden-spec'd in isolation; this is their composed, oracle-checked
+    * surface.
     */
   private object QualifierStack {
     import graft.nlp.{Patterns, PhraseMatcher, RuleQualifier}
     val terms: PhraseMatcher = PhraseMatcher.build(Map(
       "asthme" -> Seq("asthme"), "cirrhose" -> Seq("cirrhose"),
       "diabete" -> Seq("diabète"), "migraine" -> Seq("migraine")))
-    val qualifiers: Seq[RuleQualifier] = Seq(
-      new RuleQualifier(Patterns.negation),
-      new RuleQualifier(Patterns.hypothesis),
-      new RuleQualifier(Patterns.family),
-      new RuleQualifier(Patterns.reportedSpeech))
+    val qualifier = new RuleQualifier(Seq(Patterns.negation,
+      Patterns.hypothesis, Patterns.family, Patterns.reportedSpeech))
   }
 
   private val qualifierStackUdf = udf((text: String) => {
     val tokens = Normalizer.normalize(text, Tokenizer.tokenize(text))
     val sents = Sentencizer.sentences(tokens)
     val ents = QualifierStack.terms.findMatches(tokens, text)
-    val flags = QualifierStack.qualifiers.map(
-      _.qualify(text, tokens, sents, ents).map(_._1))
-    ents.indices.map(i =>
-      (ents(i).label, flags(0)(i), flags(1)(i), flags(2)(i), flags(3)(i)))
+    val flags = QualifierStack.qualifier.flags(text, tokens, sents, ents)
+    ents.iterator.zip(flags.iterator).map { case (e, f) =>
+      (e.label, f(0), f(1), f(2), f(3))
+    }.toSeq
   })
 
   private val tnmUdf = udf((s: String) =>

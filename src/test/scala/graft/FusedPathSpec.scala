@@ -12,9 +12,12 @@ import graft.pipes.{Dates, DatesOptions, DocPipeline}
 /** The fused entity path against oracles kept here in their earlier,
   * slower form: `entsTable` rows equal `annotate(text).ents` although
   * the entity path skips the dates layer; the literal-gated pollution
-  * bank excludes exactly what the ungated bank does; and the
+  * bank excludes exactly what the ungated bank does; the
   * binary-searched qualifier scopes return the same flags and cues, in
-  * the same order, as the scope-by-scope loop.
+  * the same order, as the scope-by-scope loop; the tokenizer's scanner
+  * emits the tokens of the word regex it replaced; and one qualifier
+  * engine over several banks returns what one engine per bank, run one
+  * after another, did.
   */
 class FusedPathSpec extends AnyFunSuite {
 
@@ -60,6 +63,25 @@ class FusedPathSpec extends AnyFunSuite {
       }
       assert(notes.exists(t => pipe.annotate(t).dates.nonEmpty))
     }
+  }
+
+  test("entsTable schema: the flags arrive as the nullable booleans the " +
+      "attrs map gave") {
+    import TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val pipe = DocPipeline(terms = Map("fievre" -> Seq("fièvre")),
+      qualifiers = qualifiers)
+    val out = pipe.entsTable(Seq((1L, "Pas de fièvre.")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    assert(out.schema === StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("begin", IntegerType), StructField("end", IntegerType),
+      StructField("label", StringType),
+      StructField("lexical_variant", StringType)) ++
+      qualifiers.map(q => StructField(q.name, BooleanType))))
+    assert(out.collect().map(_.toSeq).toSeq ===
+      Seq(Seq(1L, 7, 13, "fievre", "fièvre", true, false, false, false, false)))
   }
 
   // ---- pollution: gated bank vs the ungated bank --------------------
@@ -299,5 +321,332 @@ class FusedPathSpec extends AnyFunSuite {
           .map(b => Sent(b, text.length)).toArray)
       sameAsOracle(text, ents, sents)
     }
+  }
+
+  // ---- tokenizer: scanner vs the word regex -------------------------
+
+  /** The regex tokenizer the scanner replaced, kept verbatim as the
+    * oracle.
+    */
+  private object RegexTokenizer {
+    private val exceptions = "Dr\\.|Pr\\.|M\\.|Mme\\.|Mlle\\.|(?i:ep\\.)"
+    private val acronym = "[A-Z][A-Z0-9]*\\.(?=[^\\W])"
+    private val numLike = "\\d+(?:[.,]\\d(?![.,]?[0-9])|(?![.,]?[0-9]))?"
+    // Unicode punctuation + symbols + the quote variants the reference adds.
+    private val punctCls = "\\p{P}\\p{S}\"'ˊ＂〃ײ᳓″״‶˶ʺ“”˝"
+    private val default =
+      s"[^\\d$punctCls\\n\\s]+(?:['ˊ](?=[\\p{L}]|$$))?"
+
+    private val wordRegex: Pattern = Pattern.compile(
+      s"($exceptions|$acronym|$numLike|[$punctCls]|[\\n\\r\\t]|[^\\S\\r\\n\\t]+|$default)")
+
+    def tokenize(text: String): Array[Token] = {
+      if (text == null) return Array.empty
+      val m = wordRegex.matcher(text)
+      val out = new ArrayBuffer[Token](text.length / 5 + 4)
+      while (m.find()) {
+        val t = m.group(1)
+        out += Token(m.start(1), m.end(1), t, t, excluded = false)
+      }
+      out.toArray
+    }
+  }
+
+  /** The scanner emits the regex's tokens on every text. */
+  private def assertSameTokens(texts: Iterator[String]): Unit = {
+    val bad = texts.filter(t =>
+      !java.util.Arrays.equals(Tokenizer.tokenize(t).asInstanceOf[Array[AnyRef]],
+        RegexTokenizer.tokenize(t).asInstanceOf[Array[AnyRef]]))
+      .take(5).toSeq
+    assert(bad.isEmpty, bad.map(t => t.map(c => f"\\u${c.toInt}%04x").mkString)
+      .mkString("scanner != regex on: ", ", ", ""))
+  }
+
+  test("tokenizer: every BMP char alone and in word, number and " +
+      "apostrophe contexts") {
+    val contexts = Seq(("", ""), ("a", "b"), ("A", "1"), ("l", ""),
+      ("3", "5"), ("'", ""), ("l'", ""), ("lˊ", ""), ("l", "'"))
+    contexts.foreach { case (pre, post) =>
+      assertSameTokens((0 until 0x10000).iterator.map(c => s"$pre${c.toChar}$post"))
+    }
+  }
+
+  test("tokenizer: a trailing apostrophe before a letter or the end " +
+      "of the text") {
+    val cases = Seq("l'", "l'\n", "l'\r\n", "l'\r", "l'\u0085", "l'\u2028",
+      "l'\u2029", "l'\n\n", "l'\r\n ", "l' ", "l'\n.", "lˊ", "lˊ\n",
+      "lˊ\r\n", "l'é", "l'E", "l'1", "l''", "aujourd'hui", "l'\u0085x",
+      "l'𝐀", "l'😀")
+    assertSameTokens(cases.iterator)
+    assert(Tokenizer.tokenize("l'\n").map(_.text).toSeq === Seq("l'", "\n"))
+    assert(Tokenizer.tokenize("l'\n\n").map(_.text).toSeq === Seq("l", "'", "\n", "\n"))
+  }
+
+  test("tokenizer: surrogates, quote variants, soft hyphen and the " +
+      "abbreviation exceptions") {
+    val cases = Seq("a😀b", "𝐀x", "x𝐀",
+      "\uD800", "\uDC00", "a\uD800b", "a\uDC00b", "\uD800𐀀",
+      "\uDE00\uD83D", "ˊ", "aˊb", "ʺ", "aʺb", "ײ", "aײb", "soft\u00ADhyphen",
+      "\u00AD", "Dr.", "Dr.X", "Mme.", "Mme.Y", "M.", "Mlle.", "Pr.", "ep.",
+      "EP.", "Ep.", "eP.x", "DR.", "DR.x", "mme.", "Mmes.", "ADM.", "aDr.",
+      "3Dr.", "Dr", "Dr .", "ep", "step.", "STEP.x", "\u00A0", "a\u00A0b",
+      " \u000B\f x", "\t\t", "\r\n", "« pas »", "“cite”")
+    assertSameTokens(cases.iterator)
+    assert(Tokenizer.tokenize("Vu par le Dr.Martin").map(_.text).toSeq ===
+      Seq("Vu", " ", "par", " ", "le", " ", "Dr.", "Martin"))
+  }
+
+  test("tokenizer: acronyms with or without a following word char, " +
+      "and decimal numbers") {
+    val cases = Seq("C.P.G", "C.P.G.", "ACR5", "ABC.d", "ABC. d", "ABC.",
+      "A1.B", "A.é", "A._", "A.1", "3,5", "3,55", "3,5.1", "3.5,", "12,3.",
+      "1.2.3", "3,,5", "3.a", "3,5,", "3,5,6", "10.", ".5", "3.5mg")
+    assertSameTokens(cases.iterator)
+    assert(Tokenizer.tokenize("3,5").map(_.text).toSeq === Seq("3,5"))
+    assert(Tokenizer.tokenize("3,55").map(_.text).toSeq === Seq("3", ",", "55"))
+    assert(Tokenizer.tokenize("3,5.1").map(_.text).toSeq === Seq("3", ",", "5.1"))
+    assert(Tokenizer.tokenize("C.P.G").map(_.text).toSeq === Seq("C.", "P.", "G"))
+  }
+
+  test("tokenizer: 300,000 seeded random strings") {
+    val alphabet = "aAZlepMDr350.,'ˊ \n\r\t\u000B\f\u0085\u2028é-«»" +
+      "😀ʺ_\u00A0$E\u2029\uD835ײ"
+    assert(alphabet.length === 38)
+    val rng = new Random(11)
+    assertSameTokens(Iterator.fill(300000)(
+      Seq.fill(rng.nextInt(13))(alphabet(rng.nextInt(alphabet.length))).mkString))
+  }
+
+  /** Clinical-looking notes: seeded concatenations of note fragments. */
+  private def generatedNotes(n: Int, seed: Int): Seq[String] = {
+    val frags = Seq("Pas de fièvre", "le patient", "Mme. Dupont", "Dr. Martin",
+      "ep. ", "C.P.G", "SpO2 92 %", "3,5 mg", "12/03/2021", "l'estomac",
+      "aujourd'hui", "« pas de douleur »", "\"dit-il\"", "mère diabétique",
+      "suspicion de fracture", "sans doute", "ATCD : HTA", "\n", "\r\n", " ",
+      "  ", "\t", ".", ", ", "; ", "(", ")", "?", "…", "n'exclut pas",
+      "incompatible avec", "absence de toux", "rapporte", "il y a 3 jours",
+      "www.aphp.fr", "diab-\nète", "TA 12/8", "ACR5", "1.2.3", "l'")
+    val rng = new Random(seed)
+    Seq.fill(n)(Seq.fill(1 + rng.nextInt(40))(frags(rng.nextInt(frags.size)))
+      .mkString(if (rng.nextBoolean()) " " else ""))
+  }
+
+  test("tokenizer: 3,000 generated notes") {
+    assertSameTokens(generatedNotes(3000, 5).iterator)
+  }
+
+  // ---- qualifier: one engine vs one engine per bank -----------------
+
+  /** `RuleQualifier` as it ran one bank per engine, kept verbatim as the
+    * oracle; the pipeline ran one of these per bank, one after another.
+    */
+  private final class PerBankQualifier(patterns: QualifierPatterns) {
+
+    private val phraseMatcher = PhraseMatcher.build(Map(
+      "pseudo" -> patterns.pseudo,
+      "preceding" -> patterns.preceding,
+      "following" -> patterns.following,
+      "termination" -> patterns.termination))
+
+    private val regexMatcher =
+      if (patterns.precedingRegex.isEmpty) None
+      else Some(RegexMatcher.build(
+        Map("preceding" -> patterns.precedingRegex), attrNorm = false))
+
+    private val containingMatcher =
+      if (patterns.containingRegex.isEmpty) None
+      else Some(RegexMatcher.build(
+        Map("containing" -> patterns.containingRegex), attrNorm = false))
+
+    def qualify(
+        text: String,
+        tokens: Array[Token],
+        sents: Array[Sent],
+        ents: Seq[Ent]): Seq[(Boolean, Seq[Ent])] = {
+      if (ents.isEmpty) return Nil
+      val cues = phraseMatcher.findMatches(tokens, text) ++
+        regexMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil)
+
+      val terminations = cues.filter(_.label == "termination")
+      val docEnd = if (text == null) 0 else text.length
+      val starts =
+        (sents.map(_.begin) ++ terminations.map(_.begin) :+ docEnd)
+          .distinct.sorted
+
+      val matches = SpanAlgebra.filterSpans(cues, Some("pseudo"))
+      val preceding = matches.filter(_.label == "preceding").toArray
+      val following = matches.filter(_.label == "following").toArray
+      val precBegins = preceding.map(_.begin)
+      val follBegins = following.map(_.begin)
+
+      val results = Array.fill[(Boolean, Seq[Ent])](ents.size)((false, Nil))
+
+      containingMatcher.foreach { cm =>
+        val spans = cm.findMatches(tokens, text)
+        ents.zipWithIndex.foreach { case (ent, i) =>
+          val hit = spans.filter(s =>
+            s.begin <= ent.begin && s.end >= ent.end)
+          if (hit.nonEmpty)
+            results(i) = (true, results(i)._2 ++ hit)
+        }
+      }
+
+      ents.iterator.zipWithIndex.foreach { case (ent, i) =>
+        val cuesHit = new ArrayBuffer[Ent]
+        var k = math.max(0, lowerBound(starts, ent.begin + 1) - 1)
+        while (k < starts.length - 1 && starts(k) < ent.end) {
+          var j = lowerBound(precBegins, starts(k))
+          val jEnd = lowerBound(precBegins, ent.begin + 1)
+          while (j < jEnd) {
+            if (preceding(j).end <= ent.begin) cuesHit += preceding(j)
+            j += 1
+          }
+          j = lowerBound(follBegins, ent.end)
+          while (j < follBegins.length && follBegins(j) < starts(k + 1)) {
+            cuesHit += following(j)
+            j += 1
+          }
+          k += 1
+        }
+        if (cuesHit.nonEmpty)
+          results(i) = (true, results(i)._2 ++ cuesHit)
+      }
+      results.toSeq
+    }
+
+    def apply(
+        text: String,
+        tokens: Array[Token],
+        sents: Array[Sent],
+        ents: Seq[Ent]): Seq[Ent] = {
+      val res = qualify(text, tokens, sents, ents)
+      ents.zip(res).map { case (e, (hit, _)) =>
+        e.copy(attrs = e.attrs + (patterns.name -> hit.toString))
+      }
+    }
+
+    private def lowerBound(xs: Array[Int], x: Int): Int = {
+      var lo = 0
+      var hi = xs.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (xs(mid) < x) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+  }
+
+  /** The one engine over `banks` returns, per bank, the flags and cue
+    * lists (in order) of that bank's own engine, and writes the attrs
+    * the per-bank loop wrote; returns the one engine's results.
+    */
+  private def sameAsPerBank(banks: Seq[QualifierPatterns], text: String,
+      ents: Seq[Ent], sents: Option[Array[Sent]] = None)
+      : Seq[Seq[(Boolean, Seq[Ent])]] = {
+    val engine = new RuleQualifier(banks)
+    val perBank = banks.map(new PerBankQualifier(_))
+    val toks = Normalizer.normalize(text, Tokenizer.tokenize(text))
+    val ss = sents.getOrElse(Sentencizer.sentences(toks))
+    val got = engine.qualifyAll(text, toks, ss, ents)
+    val want = perBank.map(_.qualify(text, toks, ss, ents))
+    assert(got === want, s"cues of '$text'")
+    assert(engine.apply(text, toks, ss, ents) ===
+      perBank.foldLeft(ents)((es, q) => q.apply(text, toks, ss, es)),
+      s"attrs of '$text'")
+    got
+  }
+
+  test("qualifier: one engine over the five banks equals the per-bank " +
+      "loop on generated documents, entities and sentence cuts") {
+    val words = Seq("pas de", "sans", "sans doute", "absence de", "aucun",
+      "mère", "père", "familial", "suspicion de", "probable", "possible",
+      "selon", "dit", "rapporte", "antécédent de", "ATCD", "mais", "et",
+      "avec", "incompatible avec", "car", ".", ",", ";", "\n", "«", "»",
+      "\"", "fracture", "fièvre", "douleur", "diabète", "exclue", "négatif",
+      "le patient", "Le", "a", "une", "bien", "écartée", "ne", "jamais",
+      "pas de doute", "il y a", "en 2019", "aucun signe de", "?")
+    val rng = new Random(17)
+    var fired = 0
+    (1 to 600).foreach { _ =>
+      val text = Seq.fill(3 + rng.nextInt(30))(words(rng.nextInt(words.size)))
+        .mkString(" ")
+      val ents = Seq.fill(rng.nextInt(6)) {
+        val b = rng.nextInt(text.length + 1)
+        Ent(b, math.min(text.length, b + rng.nextInt(25)), "x", "")
+      }
+      val sents =
+        if (rng.nextBoolean()) None
+        else Some((0 until rng.nextInt(5))
+          .map(_ => rng.nextInt(text.length + 1)).sorted
+          .map(b => Sent(b, text.length)).toArray)
+      fired += sameAsPerBank(qualifiers, text, ents, sents)
+        .map(_.count(_._1)).sum
+    }
+    assert(fired > 600, "the generated documents qualify entities")
+  }
+
+  test("qualifier: a term that is both pseudo and preceding keeps its " +
+      "tie-break, next to banks listing it under other roles") {
+    val both = QualifierPatterns("both", pseudo = Seq("sans", "pas de doute"),
+      preceding = Seq("sans", "pas"), following = Seq("sans"),
+      precedingRegex = Nil, termination = Seq(",", "mais"))
+    val text = "Fièvre sans toux, pas de doute sur la fracture mais sans douleur."
+    val ents = Seq(ent(text, "toux"), ent(text, "fracture"), ent(text, "douleur"),
+      ent(text, "Fièvre"))
+    val got = sameAsPerBank(Seq(Patterns.negation, both, Patterns.hypothesis),
+      text, ents)
+    // the preceding label sorts before the pseudo one, so filterSpans
+    // keeps the preceding "sans" and only then lets the pseudo claim it
+    assert(got(1).map(_._1) === Seq(true, false, true, true))
+    assert(got(1).head._2.map(_.text) === Seq("sans"))
+    assert(sameAsPerBank(Seq(both), text, ents) === Seq(got(1)))
+  }
+
+  test("qualifier: banks with different termination lists cut their " +
+      "own scopes") {
+    def bank(name: String, termination: Seq[String]) = QualifierPatterns(
+      name, pseudo = Nil, preceding = Seq("pas de"), following = Seq("exclue"),
+      precedingRegex = Nil, termination = termination)
+    val byMais = bank("mais", Seq("mais"))
+    val byEt = bank("et", Seq("et"))
+    val text = "Pas de fièvre et toux mais douleur et fracture exclue"
+    val ents = Seq(ent(text, "toux"), ent(text, "douleur"), ent(text, "fracture"),
+      ent(text, "fièvre"))
+    val got = sameAsPerBank(Seq(byMais, byEt, byMais.copy(name = "mais2")),
+      text, ents)
+    // "exclue" reaches back to "douleur" across "et" but not "mais"
+    assert(got(0).map(_._1) === Seq(true, true, true, true))
+    assert(got(1).map(_._1) === Seq(false, false, true, true))
+    assert(got(2) === got(0))
+    sameAsPerBank(Seq(Patterns.negation, byEt, Patterns.reportedSpeech,
+      byMais), text, ents)
+  }
+
+  test("qualifier: a bank with no pseudo list orders overlapping cues " +
+      "as pseudo suppression would") {
+    val noPseudo = QualifierPatterns("np", pseudo = Nil,
+      preceding = Seq("pas", "pas de", "de", "pas de signe de"),
+      following = Seq("absente", "absente ce jour", "ce jour"),
+      precedingRegex = Seq("(?i)pas\\s+de", "(?i)de\\s+signe"),
+      termination = Seq(";"))
+    val text = "Pas de signe de fièvre ; toux absente ce jour ; pas de douleur"
+    val got = sameAsPerBank(Seq(noPseudo), text,
+      Seq(ent(text, "fièvre"), ent(text, "toux"), ent(text, "douleur")))
+    assert(got.head.map(_._1) === Seq(true, true, true))
+    assert(got.head.head._2.map(_.text.toLowerCase) === Seq("pas de signe de",
+      "pas de", "pas de", "pas", "de signe", "de", "de"))
+    sameAsPerBank(Seq(Patterns.negation, noPseudo, Patterns.family), text,
+      Seq(ent(text, "fièvre"), ent(text, "toux"), ent(text, "douleur")))
+  }
+
+  test("qualifier: reported-speech containment in the shared engine") {
+    val text = "Il rapporte « pas de fracture » et \"sa mère\" dit avoir mal " +
+      "(selon le patient)."
+    val got = sameAsPerBank(qualifiers, text,
+      Seq(ent(text, "fracture"), ent(text, "mère"), ent(text, "mal")))
+    val rs = got(qualifiers.indexWhere(_.name == "reported_speech"))
+    assert(rs.map(_._1) === Seq(true, true, true))
+    assert(rs.head._2.head.text.startsWith("«"))
+    assert(rs(1)._2.head.text === "\"sa mère\"")
   }
 }
