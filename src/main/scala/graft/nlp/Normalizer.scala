@@ -11,6 +11,11 @@ import java.util.regex.Pattern
   * never drift — the property the whole span pipeline depends on
   * (SURVEY.md §7.4 risk 1). Spaces and pollution only flip the `excluded`
   * flag; the raw text is untouched.
+  *
+  * Each pollution pattern runs as a lead-driven scan ([[Lead.scan]]),
+  * tried only at the offsets its declared [[Lead]] allows (a literal
+  * prefix, a char-class run, a line start); a literal gate is one kind
+  * of lead.
   */
 object Normalizer {
 
@@ -78,18 +83,17 @@ object Normalizer {
     if (out == null) s else new String(out)
   }
 
-  /** A pollution pattern plus literals one of which every match of it
-    * must contain, read off the pattern itself (never off a corpus). A
-    * text holding none of them cannot match, so the pattern is not run
-    * on it; with no literals it always runs. The gate skips only scans
-    * that would find nothing, so exclusions are the same on every input.
-    * It saves time only on texts holding none of the literals; a text
-    * holding one pays the full scan plus the literal search.
+  /** A pollution pattern and its [[Lead]], declared next to it: the
+    * offsets where a match can start. [[Lead.scan]] runs the pattern
+    * only there, so a text costs one linear pass per pattern plus one
+    * anchored try per candidate, whatever it holds. `FusedPathSpec`
+    * proves each lead over the whole BMP and checks the scans against
+    * the `find` loop. Four patterns keep a [[Lead.Contains]] literal
+    * gate: web/mail addresses (each alternative may open with `\S*`),
+    * the intraword split and the two information blocks.
     */
-  private[graft] final case class Gated(regex: String, anyOf: String*) {
+  private[graft] final case class Scanned(regex: String, lead: Lead) {
     val pattern: Pattern = Pattern.compile(regex)
-    def mayMatch(text: String): Boolean =
-      anyOf.isEmpty || anyOf.exists(text.contains(_))
   }
 
   /** Pollution detectors (excluded char ranges), following the reference
@@ -99,62 +103,67 @@ object Normalizer {
     * `biology` (table rows) and `coding` (ICD-10 blocks) stay off by
     * default there too — disease-name false positives.
     */
-  private val pollutionPatterns: Seq[Gated] = Seq(
+  private val pollutionPatterns: Seq[Scanned] = Seq(
     // bars: NBNbWbW filler + rules, as one char class (no alternation)
-    Gated("(?i)[nbw_=-]{5,}"),
+    Scanned("(?i)[nbw_=-]{5,}", Lead.Prefix(Seq.fill(5)("nbw_=-"): _*)),
     // web/mail: each alternative holds one of the literals. Ungated, its
     // leading `\S*` restarts at every char offset of every text.
-    Gated("www\\.\\S*|\\S*@\\S*|\\S*\\.(?:fr|com|net|org)\\b",
-      "www.", "@", ".fr", ".com", ".net", ".org"),
+    Scanned("www\\.\\S*|\\S*@\\S*|\\S*\\.(?:fr|com|net|org)\\b",
+      Lead.Contains("www.", "@", ".fr", ".com", ".net", ".org")),
     // intraword line split
-    Gated("(?<![\\W\\d_])-\\n", "-\n"),
+    Scanned("(?<![\\W\\d_])-\\n", Lead.Contains("-\n")),
     // leftside margin with doctor names
-    Gated("(?mi)(^((dr)|(pr))(\\.|\\s|of).*)+"),
+    Scanned("(?mi)(^((dr)|(pr))(\\.|\\s|of).*)+", Lead.LineStart()),
     // patient-information boilerplate block (condensed reference form)
-    Gated("(?s)(=====+\\s*)?(Les\\s*donn[ée]es\\s*administratives,\\s*sociales\\s*" +
+    Scanned("(?s)(=====+\\s*)?(Les\\s*donn[ée]es\\s*administratives,\\s*sociales\\s*" +
       "|I?nfo\\s*rmation\\s*aux?\\s*patients?" +
       "|L['’]AP-HP\\s*collecte\\s*vos\\s*donn[ée]es\\s*administratives)" +
-      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", "droit-opposition"),
+      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", Lead.Contains("droit-opposition")),
     // print footer: a SHORT line starting with "imprimé le dd/mm/yyyy"
     // (page footers are standalone lines; requiring line-start + bounded
     // tail keeps narrative sentences that merely mention a print date)
-    Gated("(?im)^\\s*imprim.\\sle\\s\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]{0,30}$"),
+    Scanned("(?im)^\\s*imprim.\\sle\\s\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]{0,30}$",
+      Lead.LineStart()),
     // page-footer family (pollution/patterns.py `footer`): a page
     // counter line ("1/3", "2/10?") followed by a patient line, or a
     // date + 10-digit IPP identifier line
-    Gated("(?im)^\\d\\d?/\\d\\d?\\s?[^\\n]*\\n?pat[^\\n]*(\\n?courrier valid[^\\n]*)?"),
+    Scanned("(?im)^\\d\\d?/\\d\\d?\\s?[^\\n]*\\n?pat[^\\n]*(\\n?courrier valid[^\\n]*)?",
+      Lead.LineStart()),
     // date + IPP line (date BEFORE the 10-digit IPP, as the reference
     // footer has it): line-start anchored with one lookahead. The naive
     // form (leading unanchored `[^\n]*` before the date) backtracks
     // from every char position — O(len²) per doc, measured 0.8ms/doc
     // on the bench corpus vs ~1µs for this one, which attempts only at
-    // line starts and scans each line once.
-    Gated("(?m)^(?=[^\\n]*\\b\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]*80\\d{8})[^\\n]+"),
+    // line starts and scans each line once. `80\d{8}` is a run of ten
+    // ASCII digits before the line's `\n`, so only a line holding one
+    // is tried.
+    Scanned("(?m)^(?=[^\\n]*\\b\\d\\d/\\d\\d/\\d\\d\\d\\d\\b[^\\n]*80\\d{8})[^\\n]+",
+      Lead.LineStart(digitRun = 10)),
     // the second AP-HP information-block opener (patterns.py
     // `information`), same bounded tail to the droit-opposition URL
-    Gated("(?s)L['’]Assistance\\s*Publique\\s*-\\s*H[ôo]pitaux\\s*de\\s*Paris\\s*" +
+    Scanned("(?s)L['’]Assistance\\s*Publique\\s*-\\s*H[ôo]pitaux\\s*de\\s*Paris\\s*" +
       "\\(?AP-HP\\)?\\s*a\\s*cr[éee]{1,2}\\s*une\\s*base\\s*de\\s*donn[ée]es" +
-      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", "droit-opposition"),
+      ".{0,2000}?https?://\\S*droit-opposition[\\s.]*", Lead.Contains("droit-opposition")),
     // tobacco-cessation banner (patterns.py `information` second entry)
-    Gated("(?si)l['’]arr[êe]t\\s*du\\s*tabac\\s*permet\\s*de\\s*diminuer\\s*le\\s*" +
-      "risque\\s*de\\s*maladie\\s*cardiovasculaire\\.")
+    Scanned("(?si)l['’]arr[êe]t\\s*du\\s*tabac\\s*permet\\s*de\\s*diminuer\\s*le\\s*" +
+      "risque\\s*de\\s*maladie\\s*cardiovasculaire\\.", Lead.Prefix("l", "'’", "a", "r", "r"))
   )
 
-  /** The live default pollution bank with its literal gates, exposed for
-    * the regex profiler (tools/ProfRegex) and the equivalence tests, so
-    * both always see the shipped patterns and gates instead of a
+  /** The live default pollution bank with its leads, exposed for the
+    * regex profiler (tools/ProfRegex) and the equivalence tests, so
+    * both always see the shipped patterns and leads instead of a
     * hand-copied list that drifts.
     */
-  private[graft] def defaultPollutionBank: Seq[Gated] = pollutionPatterns
+  private[graft] def defaultPollutionBank: Seq[Scanned] = pollutionPatterns
 
   /** Off-by-default pollution detectors, mirroring the reference's
     * `default_enabled` (pollution/patterns.py:60-69): biology table rows
     * and ICD-10 coding blocks false-positive on disease names, so they
     * are opt-in there too.
     */
-  private val biologyPattern = Pattern.compile("(\\b.*[|¦].*\\n)+")
-  private val codingPattern = Pattern.compile(
-    ".*? \\(\\d+\\) [a-zA-Z]\\d{2,4}.*?(\\n|[a-zA-Z]\\d{2,4})")
+  private val biology = Scanned("(\\b.*[|¦].*\\n)+", Lead.Anywhere)
+  private val coding = Scanned(
+    ".*? \\(\\d+\\) [a-zA-Z]\\d{2,4}.*?(\\n|[a-zA-Z]\\d{2,4})", Lead.Anywhere)
 
   case class Options(
       lowercase: Boolean = true,
@@ -176,21 +185,17 @@ object Normalizer {
       text: String,
       tokens: Array[Token],
       opts: Options = Options()): Array[Token] = {
-    val active =
-      if (!opts.pollution || text == null) Seq.empty
-      else pollutionPatterns.filter(_.mayMatch(text)).map(_.pattern) ++
-        (if (opts.pollutionBiology) Seq(biologyPattern) else Nil) ++
-        (if (opts.pollutionCoding) Seq(codingPattern) else Nil)
-    val polluted: Array[(Int, Int)] =
-      active.flatMap { p =>
-        val m = p.matcher(text)
-        val acc = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-        while (m.find()) acc += ((m.start, m.end))
-        acc
-      }.toArray
+    val polluted = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    if (opts.pollution && text != null) {
+      def scan(s: Scanned): Unit =
+        Lead.scan(s.pattern, s.lead, text)(m => polluted += ((m.start, m.end)))
+      pollutionPatterns.foreach(scan)
+      if (opts.pollutionBiology) scan(biology)
+      if (opts.pollutionCoding) scan(coding)
+    }
 
     tokens.map { t =>
-      val excl =
+      val excl = polluted.nonEmpty &&
         polluted.exists { case (b, e) => t.begin < e && t.end > b }
       t.copy(norm = norm(t.text, opts), excluded = excl)
     }

@@ -11,6 +11,18 @@ package graft.nlp
   */
 object Patterns {
 
+  /** Leads ([[Lead]]) of the shipped cue regexes, each declared next to
+    * its regex through [[led]]; `FusedPathSpec` proves them over the
+    * whole BMP. `RegexMatcher.build` uses them, under its default flags,
+    * in place of a derived lead.
+    */
+  private val declared = Map.newBuilder[String, Lead]
+
+  private def led(lead: Lead)(regex: String): String = {
+    declared += regex -> lead
+    regex
+  }
+
   /** Proposition delimiters bounding a cue's scope. */
   val termination: Seq[String] = Seq(
     "et", "bien que", "même si", "mais", "or", "alors que", "sauf",
@@ -96,12 +108,13 @@ object Patterns {
       "écarté", "écartée", "écartés", "écartées",
       "rejeté", "rejetée", "interdit", "interdite"),
     precedingRegex = Seq(
-      "(?i)aucun(e)?\\s+signe\\s+(de|d')",
+      led(Lead.literal("aucun"))("(?i)aucun(e)?\\s+signe\\s+(de|d')"),
       // reference negation/patterns.py preceding_regex: "ne" followed
       // within 3 words by pas/point/ni/aucun/jamais/rien. (?U) makes
       // Java's \w unicode like Python's — without it an accented word
       // ("détecte") silently breaks the 3-word lookahead
-      "(?iU)\\bne\\b(?=[ \\n]*(?:\\w*[ \\n]*){3}(?:pas|point|ni|aucun|jamais|rien))"),
+      led(Lead.literal("ne"))(
+        "(?iU)\\bne\\b(?=[ \\n]*(?:\\w*[ \\n]*){3}(?:pas|point|ni|aucun|jamais|rien))")),
     termination = termination)
 
   val family: QualifierPatterns = QualifierPatterns(
@@ -177,7 +190,8 @@ object Patterns {
       "soupçonné", "soupçonnée", "soupçonnés", "soupçonnées",
       "suggéré", "suggérée", "suggérés", "suggérées",
       "suspecté", "suspectée", "suspectés", "suspectées", "douté"),
-    precedingRegex = Seq("(?i)suspicion(s)?\\s+(de|d')"),
+    precedingRegex = Seq(
+      led(Lead.literal("suspicion"))("(?i)suspicion(s)?\\s+(de|d')")),
     termination = termination)
 
   val reportedSpeech: QualifierPatterns = QualifierPatterns(
@@ -212,7 +226,7 @@ object Patterns {
     termination = Seq.empty,
     // the reference flags entities INSIDE quotation marks
     // (reported_speech patterns.py `quotation`) — a containment cue
-    containingRegex = Seq("(\"[^\"]+\")|(«[^»]+»)"))
+    containingRegex = Seq(led(Lead.Prefix("\"«"))("(\"[^\"]+\")|(«[^»]+»)")))
 
   /** History-of-illness section triggers (used by the history qualifier
     * together with section spans; `.../history/patterns.py`).
@@ -228,6 +242,11 @@ object Patterns {
       "opéré en", "opérée en"),
     following = Seq(
       "dans l'enfance", "il y a"),
-    precedingRegex = Seq("(?i)en\\s+(19|20)\\d\\d"),
+    // `\s` here is ASCII whitespace (no UNICODE_CHARACTER_CLASS)
+    precedingRegex = Seq(led(Lead.Prefix("e", "n", " \t\n\u000B\f\r"))(
+      "(?i)en\\s+(19|20)\\d\\d")),
     termination = termination)
+
+  /** Declared leads of the shipped cue regexes, by regex. */
+  private[graft] val cueLeads: Map[String, Lead] = declared.result()
 }

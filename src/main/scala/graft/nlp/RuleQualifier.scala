@@ -44,6 +44,14 @@ case class QualifierPatterns(
   * flags are written once, for all banks. A single bank is a one-element
   * engine.
   *
+  * The cue regexes (preceding and containment) run through
+  * [[RegexMatcher]] as lead-driven scans ([[Lead.scan]]): each is tried
+  * only where a match can start (the shipped banks declare those leads
+  * next to their regexes, `Patterns.cueLeads`; a config regex gets a
+  * derived one) and finds exactly what `Matcher.find` finds.
+  * `FusedPathSpec` proves the leads over the whole BMP and checks the
+  * scans against `find`.
+  *
   * Row-local: distributed as an expression over (text, tokens, sents, ents)
   * columns — zero shuffle, embarrassingly parallel at 100 TB.
   */

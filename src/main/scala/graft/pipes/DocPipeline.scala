@@ -40,13 +40,7 @@ case class DocPipeline(
     normOpts: Normalizer.Options = Normalizer.Options(),
     dates: Option[DatesOptions] = None) extends Serializable {
 
-  @transient private lazy val phraseMatcher =
-    if (terms.nonEmpty) Some(PhraseMatcher.build(terms, normOpts = normOpts))
-    else None
-  @transient private lazy val regexMatcher =
-    if (regexPatterns.nonEmpty) Some(RegexMatcher.build(regexPatterns))
-    else None
-  @transient private lazy val qualifier = new RuleQualifier(qualifiers)
+  @transient private[graft] lazy val engine = DocPipeline.engine(this)
   @transient private lazy val entsUdf = {
     val self = this
     udf((s: String) => self.entFlags(s))
@@ -61,7 +55,7 @@ case class DocPipeline(
       case Some(o) => Dates.extract(text, None, faithful = o.faithful)
       case None => Nil
     }
-    Annotations(tokens.toSeq, sents.toSeq, qualifier.withFlags(ents, flags),
+    Annotations(tokens.toSeq, sents.toSeq, engine.qualifier.withFlags(ents, flags),
       dateSpans)
   }
 
@@ -73,10 +67,10 @@ case class DocPipeline(
     val tokens = Normalizer.normalize(text, Tokenizer.tokenize(text), normOpts)
     val sents = Sentencizer.sentences(tokens)
     val rawEnts =
-      phraseMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil) ++
-        regexMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil)
+      engine.phraseMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil) ++
+        engine.regexMatcher.map(_.findMatches(tokens, text)).getOrElse(Nil)
     val ents = SpanAlgebra.filterSpans(rawEnts)
-    (tokens, sents, ents, qualifier.flags(text, tokens, sents, ents))
+    (tokens, sents, ents, engine.qualifier.flags(text, tokens, sents, ents))
   }
 
   private def entFlags(text: String): Seq[EntFlags] = {
@@ -117,6 +111,40 @@ case class DocPipeline(
         Seq(col(idCol), col("ent.begin").as("begin"),
           col("ent.end").as("end"), col("ent.label").as("label"),
           col("ent.text").as("lexical_variant")) ++ flagCols: _*)
+  }
+}
+
+object DocPipeline {
+
+  /** The matchers and the qualifier engine of one pipeline config. */
+  private[graft] final class Engine(p: DocPipeline) {
+    val phraseMatcher: Option[PhraseMatcher] =
+      if (p.terms.nonEmpty) Some(PhraseMatcher.build(p.terms, normOpts = p.normOpts))
+      else None
+    val regexMatcher: Option[RegexMatcher] =
+      if (p.regexPatterns.nonEmpty) Some(RegexMatcher.build(p.regexPatterns))
+      else None
+    val qualifier = new RuleQualifier(p.qualifiers)
+  }
+
+  /** Built engines by pipeline value, per JVM, for the last few configs.
+    * Every task deserializes its own copy of the pipeline; equal copies
+    * share one engine, so the tries are built and the regexes compiled
+    * once per JVM, not once per task. The engines hold no mutable state,
+    * so tasks use them concurrently.
+    */
+  private val engines = new java.util.LinkedHashMap[DocPipeline, Engine](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[DocPipeline, Engine]): Boolean = size > 8
+  }
+
+  private def engine(p: DocPipeline): Engine = engines.synchronized {
+    var e = engines.get(p)
+    if (e == null) {
+      e = new Engine(p)
+      engines.put(p, e)
+    }
+    e
   }
 }
 

@@ -12,7 +12,7 @@ object Reason {
   // accent-tolerant classes make raw-text matching equivalent to NORM
   // for this bank, and raw matching keeps `.+` line-bounded (the clean
   // text would fold newlines into spaces)
-  private val matcher = graft.nlp.RegexMatcher.build(Map("reasons" -> Seq(
+  private[graft] val patterns: Seq[String] = Seq(
     """(?i)motif de l.?hospitalisation : .+""",
     """(?i)hospitalis[ée].?.*(pour|. cause|suite [àa]).+""",
     """(?i)(consulte|prise en charge""" +
@@ -21,7 +21,8 @@ object Reason {
     """(?i)au total\s?\:?\s?\n?.+""",
     """(?i)motif\sde\sla\sconsultation""",
     """(?i)motif\sd.admission""",
-    """(?i)conclusion\smedicale""")))
+    """(?i)conclusion\smedicale""")
+  private val matcher = graft.nlp.RegexMatcher.build(Map("reasons" -> patterns))
 
   /** Section labels that COUNT as reasons / that VETO regex reasons
     * inside them (reason/patterns.py:18-24).

@@ -15,9 +15,12 @@ import graft.pipes.{Dates, DatesOptions, DocPipeline}
   * bank excludes exactly what the ungated bank does; the
   * binary-searched qualifier scopes return the same flags and cues, in
   * the same order, as the scope-by-scope loop; the tokenizer's scanner
-  * emits the tokens of the word regex it replaced; and one qualifier
+  * emits the tokens of the word regex it replaced; one qualifier
   * engine over several banks returns what one engine per bank, run one
-  * after another, did.
+  * after another, did; every lead-driven whole-text scan returns the
+  * matches of the `find` loop, and no match starts where its lead rules
+  * one out, over the whole BMP; and deserialized copies of a pipeline
+  * share one engine.
   */
 class FusedPathSpec extends AnyFunSuite {
 
@@ -131,14 +134,14 @@ class FusedPathSpec extends AnyFunSuite {
 
   test("each gated pollution pattern excludes the same tokens as the " +
       "ungated bank on texts it matches") {
-    val gatedPatterns = bank.filter(_.anyOf.nonEmpty)
+    val gatedPatterns = bank.collect { case g @ Normalizer.Scanned(_, c: Lead.Contains) => (g, c) }
     assert(gatedPatterns.size === 4)
-    gatedPatterns.foreach { g =>
-      val texts = gatedSamples(g.anyOf.head)
+    gatedPatterns.foreach { case (g, gate) =>
+      val texts = gatedSamples(gate.anyOf.head)
       assert(texts.exists(t => g.pattern.matcher(t).find()),
         s"no sample matches ${g.regex}")
       texts.foreach { t =>
-        assert(g.mayMatch(t), s"gate rules out a text it must run on: $t")
+        assert(gate.next(t, 0) === 0, s"gate rules out a text it must run on: $t")
         assert(excluded(t) === oracleExcluded(t), t)
       }
     }
@@ -165,7 +168,7 @@ class FusedPathSpec extends AnyFunSuite {
       assert(excluded(t) === oracleExcluded(t), t)
       bank.foreach { g =>
         if (g.pattern.matcher(t).find())
-          assert(g.mayMatch(t), s"${g.regex} matches but is gated off: $t")
+          assert(g.lead.next(t, 0) >= 0, s"${g.regex} matches but is gated off: $t")
       }
     }
   }
@@ -648,5 +651,268 @@ class FusedPathSpec extends AnyFunSuite {
     assert(rs.map(_._1) === Seq(true, true, true))
     assert(rs.head._2.head.text.startsWith("«"))
     assert(rs(1)._2.head.text === "\"sa mère\"")
+  }
+
+  // ---- whole-text scans: lead-driven vs the find loop ---------------
+
+  /** The whole-text scans the engine runs with their leads: the
+    * pollution bank and the cue regexes of the shipped banks.
+    */
+  private val shippedScans: Seq[(String, Pattern, Lead)] =
+    bank.map(s => (s.regex, s.pattern, s.lead)) ++
+      qualifiers.flatMap(q => q.precedingRegex ++ q.containingRegex).map(r =>
+        (r, Pattern.compile(r, RegexMatcher.DefaultFlags),
+          RegexMatcher.leadOf(r, RegexMatcher.DefaultFlags)))
+
+  /** Config regexes, with the leads `RegexMatcher.build` derives: the
+    * benchmark's, the reason bank's and ones the other specs use.
+    */
+  private val derivedScans: Seq[(String, Pattern, Lead)] =
+    (Seq("spo2 \\d{2,3} %", "fracture du radius", "\\btest\\b",
+      "(?i)pas\\s+de", "(?i)de\\s+signe") ++ graft.pipes.Reason.patterns).map(r =>
+      (r, Pattern.compile(r, RegexMatcher.DefaultFlags),
+        RegexMatcher.leadOf(r, RegexMatcher.DefaultFlags)))
+
+  private val allScans = shippedScans ++ derivedScans
+
+  private def leadMatches(p: Pattern, lead: Lead, t: String): Seq[(Int, Int)] = {
+    val acc = ArrayBuffer.empty[(Int, Int)]
+    Lead.scan(p, lead, t)(m => acc += ((m.start, m.end)))
+    acc.toSeq
+  }
+
+  private def findMatches(p: Pattern, t: String): Seq[(Int, Int)] = {
+    val m = p.matcher(t)
+    val acc = ArrayBuffer.empty[(Int, Int)]
+    while (m.find()) acc += ((m.start, m.end))
+    acc.toSeq
+  }
+
+  /** Each scan returns find's match list on every text; returns the
+    * number of matches per scan.
+    */
+  private def assertSameScans(texts: Iterator[String],
+      scans: Seq[(String, Pattern, Lead)] = allScans): Map[String, Int] = {
+    val hits = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val bad = ArrayBuffer.empty[String]
+    texts.foreach { t =>
+      scans.foreach { case (regex, p, lead) =>
+        val want = findMatches(p, t)
+        if (leadMatches(p, lead, t) != want && bad.size < 5)
+          bad += s"$regex on ${t.map(c => f"\\u${c.toInt}%04x").mkString}"
+        hits(regex) += want.size
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("lead scan != find: ", "; ", ""))
+    hits.toMap
+  }
+
+  test("leads: every shipped cue regex declares one, and the derivation " +
+      "rule for config regexes") {
+    qualifiers.flatMap(q => q.precedingRegex ++ q.containingRegex).foreach(r =>
+      assert(Patterns.cueLeads.contains(r), r))
+    assert(shippedScans.count(_._3 == Lead.Anywhere) === 0)
+    import Lead.{literal, Anywhere}
+    val f = RegexMatcher.DefaultFlags
+    Seq("spo2 \\d{2,3} %" -> literal("spo2 "),
+      "(?i)aucun(e)?\\s+signe" -> literal("aucun"),
+      "(?iU)\\bne\\b(?=x)" -> literal("ne"), "\\bab\\b" -> literal("ab"),
+      "ab*c" -> literal("a"), "ab+c" -> literal("a"), "ab{2}" -> literal("a"),
+      "abc?" -> literal("ab"), "a\\.b" -> literal("a"), "é😀" -> literal("é"),
+      "(?i)(?u)ab" -> literal("ab"), "x*" -> Anywhere, "" -> Anywhere,
+      "a|b" -> Anywhere, "ab\\|" -> Anywhere, "(?x)ab c" -> Anywhere,
+      "(?i)(?-x)ab" -> Anywhere, "(?i:ab)c" -> Anywhere, "ab\\Gc" -> Anywhere,
+      "\\d+ab" -> Anywhere, "^ab" -> Anywhere, ".ab" -> Anywhere,
+      "[ab]c" -> Anywhere, "(ab)" -> Anywhere)
+      .foreach { case (r, want) => assert(Lead.derive(r, f) === want, r) }
+    Seq(Pattern.COMMENTS, Pattern.LITERAL, Pattern.CANON_EQ).foreach(extra =>
+      assert(Lead.derive("abc", f | extra) === Anywhere))
+    // a shipped cue regex under other flags is derived, not declared
+    assert(RegexMatcher.leadOf("(?i)en\\s+(19|20)\\d\\d", 0) === Anywhere)
+    assert(RegexMatcher.leadOf("(?i)en\\s+(19|20)\\d\\d", f) ===
+      Lead.Prefix("e", "n", " \t\n\u000B\f\r"))
+  }
+
+  test("leads: the case fold joins every pair of chars Java's " +
+      "case-insensitive match joins, over the whole BMP") {
+    val leadChars = (allScans.flatMap {
+      case (_, _, l: Lead.Prefix) => l.sets.flatten
+      case _ => Nil
+    } ++ (0 until 256).map(_.toChar)).distinct
+    val one = new Array[Char](1)
+    val cs = java.nio.CharBuffer.wrap(one)
+    val bad = ArrayBuffer.empty[String]
+    for (flags <- Seq(Pattern.CASE_INSENSITIVE, RegexMatcher.DefaultFlags);
+         p <- leadChars;
+         form <- Seq(Pattern.quote(p.toString), f"[\\x{${p.toInt}%x}]")) {
+      val m = Pattern.compile(form, flags).matcher("")
+      var c = 0
+      while (c < 0x10000) {
+        one(0) = c.toChar
+        if (m.reset(cs).matches() && Lead.fold(c.toChar) != Lead.fold(p) && bad.size < 5)
+          bad += f"$form%s ($flags) matches \\u$c%04x"
+        c += 1
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("fold splits a case pair: ", "; ", ""))
+    assert(Lead.fold('ſ') === Lead.fold('S') && Lead.fold('\u212A') === Lead.fold('k') &&
+      Lead.fold('\u0130') === Lead.fold('i'))
+  }
+
+  /** Left contexts a pattern can tell apart: start of text, each line
+    * terminator, a word char, a non-word char and a digit.
+    */
+  private val contexts = Seq("", "\n", "\r", "\u0085", "\u2028", "\u2029", "a", " ", "5")
+  private val lineContexts = contexts.filter(c => c.isEmpty || Lead.isLineTerminator(c.head))
+
+  /** `p` tried at one offset exactly as `Lead.scan` tries it. */
+  private final class Probe(p: Pattern) {
+    private val m = Lead.matcher(p, "")
+    def matches(text: String, i: Int): Boolean = Lead.matchAt(m.reset(text), i)
+    /** No match starts at `i`, and no text after `text` could make one. */
+    def refutes(text: String, i: Int): Boolean = !matches(text, i) && !m.hitEnd
+  }
+
+  test("leads: no match starts where a lead rules one out: every BMP char " +
+      "outside each lead, in each left context") {
+    val bmp = (0 until 0x10000).map(_.toChar)
+    def hex(t: String) = t.map(c => f"\\u${c.toInt}%04x").mkString
+    val lineSamples = Seq("Dr. Martin", "imprimé le 01/02/2020", "1/3\npatient X",
+      "12/03/2021 8012345678")
+    val bad = ArrayBuffer.empty[String]
+    def check(ok: Boolean, regex: String, text: => String): Unit =
+      if (!ok && bad.size < 10) bad += s"$regex on ${hex(text)}"
+    var proven = 0
+    allScans.foreach {
+      case (regex, p, lead: Lead.Prefix) =>
+        val probe = new Probe(p)
+        val sets = lead.sets.map(_.map(Lead.fold).toSet)
+        for (ctx <- contexts; k <- lead.sets.indices) {
+          val head = ctx + lead.sets.take(k).map(_.head).mkString
+          bmp.foreach { c =>
+            if (!sets(k)(Lead.fold(c)))
+              check(probe.refutes(head + c, ctx.length), regex, head + c)
+          }
+        }
+        proven += 1
+      case (regex, p, lead: Lead.LineStart) =>
+        val probe = new Probe(p)
+        val samples = lineSamples.filter(probe.matches(_, 0))
+        assert(samples.nonEmpty, s"no sample line for $regex")
+        for (s <- samples) {
+          lineContexts.foreach(ctx => assert(probe.matches(ctx + s, ctx.length), regex))
+          bmp.foreach { c =>
+            if (!Lead.isLineTerminator(c)) check(probe.refutes(c + s, 1), regex, c + s)
+          }
+        }
+        if (lead.digitRun > 0) {
+          val run = "8012345678"
+          assert(run.length === lead.digitRun)
+          for (ctx <- lineContexts; k <- run.indices; c <- bmp
+               if c != '\n' && !(c >= '0' && c <= '9')) {
+            val t = ctx + "12/03/2021 " + run.updated(k, c) + "\n12/03/2021 " + run
+            assert(lead.next(t, ctx.length) > ctx.length)
+            check(probe.refutes(t, ctx.length), regex, t)
+          }
+        }
+        proven += 1
+      case _ => // a literal gate or no lead: the find loop runs
+    }
+    assert(bad.isEmpty, bad.mkString("a lead rules out a match: ", "; ", ""))
+    assert(proven === allScans.count(s => !s._3.isInstanceOf[Lead.Contains] &&
+      s._3 != Lead.Anywhere))
+    assert(proven >= 20)
+  }
+
+  /** AP-HP boilerplate, one block per shipped scan and every cue. */
+  private val apHpBlocks = Seq(
+    "Dr. Jean MARTIN\nPr Paul DURAND\n", "\nImprimé le 03/04/2021 à 10:12\n",
+    "\n1/3\nPatient : DUPONT Jean né le 01/02/1950\nCourrier validé le 04/05/2021\n",
+    "\n12/03/2021 8012345678 DUPONT Jean\n",
+    "L’arrêt du tabac permet de diminuer le risque de maladie cardiovasculaire.",
+    "\n==========\n", "NBNbWbWbNB", "_____", "aucun signe de", "Aucune signe d'",
+    "ne fume pas", "il ne le dit jamais", "suspicion de", "Suspicions d'",
+    "en 2019", "EN 1998", "« cite »", "\"dit-il\"", "SpO2 95 %",
+    "Motif de l'hospitalisation : douleur", "au total : rien", "conclusion medicale",
+    "Hospitalisé pour chute", "consulte pour toux", "motif de la consultation",
+    "motif d'admission", "Motif d'hospitalisation : chute", "fracture du radius",
+    "un test", "pas de", "de signe") ++
+    Seq(infoBlock, infoBlock2) ++ gatedSamples.values.flatten
+
+  private def polluted(n: Int, seed: Int): Seq[String] = {
+    val rng = new Random(seed)
+    generatedNotes(n, seed).map { note =>
+      (1 to 1 + rng.nextInt(3)).foldLeft(note) { (t, _) =>
+        val at = rng.nextInt(t.length + 1)
+        t.substring(0, at) + apHpBlocks(rng.nextInt(apHpBlocks.size)) + t.substring(at)
+      }
+    }
+  }
+
+  test("lead scans equal the find loop on generated notes and on notes " +
+      "with AP-HP blocks spliced in") {
+    assertSameScans(generatedNotes(3000, 5).iterator)
+    val hits = assertSameScans(polluted(500, 9).iterator)
+    allScans.foreach { case (regex, _, _) =>
+      assert(hits(regex) > 0, s"no polluted note matches $regex")
+    }
+  }
+
+  test("lead scans equal the find loop on 300,000 seeded random strings") {
+    val frags = Seq("aucun", "AUCUNE", " signe de", "ne", "NE", "n", "e", " pas",
+      "suspicion", "ſuſpicion", "SUSP\u0130CION", "s", " de", "d'", "en", "EN",
+      " 2019", " 1998", "spo2 ", "SPO2 ", "95 %", "l'arr", "l’arr", "êt du tabac " +
+        "permet de diminuer le risque de maladie cardiovasculaire.", "L'ARRET",
+      "\"", "«", "»", "nbw", "NB", "=", "==", "_", "-", "Dr. ", "pr ", "DR.",
+      "imprimé le 01/02/2020", "1/3", "pat", "12/03/2021 ", "801234567",
+      "8012345678", "80123456789", "\r\n", "\r", "\n", "\u0085", "\u2028",
+      "\u2029", " ", "x", "é", "5", "/", "\u212A", "\u0130", "motif de l", "au total",
+      "www.", "@", ".fr", "droit-opposition", "ab", infoBlock, infoBlock2)
+    assert(frags.contains("\u212A") && frags.contains("ſuſpicion"))
+    val rng = new Random(23)
+    val hits = assertSameScans(Iterator.fill(300000)(
+      Seq.fill(rng.nextInt(9))(frags(rng.nextInt(frags.size))).mkString))
+    shippedScans.foreach { case (regex, _, _) =>
+      assert(hits(regex) > 0, s"no random string matches $regex")
+    }
+  }
+
+  test("lead scans: a regex that can match empty resumes one past each " +
+      "empty match, as find does") {
+    val texts = Seq("", "ab", "aab\nab", " \n\t\n", "\n\n\n", "\r\n  x\u2028 y", "abab", "xx")
+    // no lead: the find loop
+    val m = RegexMatcher.build(Map("e" -> Seq("x*", "b?")))
+    texts.foreach { t =>
+      assert(m.findMatches(Tokenizer.tokenize(t), t).map(e => (e.begin, e.end)) ===
+        Seq("x*", "b?").flatMap(r => findMatches(Pattern.compile(r,
+          RegexMatcher.DefaultFlags), t)), t)
+    }
+    // a lead whose candidates can hold an empty match
+    val scans = Seq(("(?m)^[ \\t]*", Lead.LineStart()), ("(?=ab)", Lead.literal("ab")),
+      ("(?=a)a?", Lead.literal("a"))).map { case (r, l) => (r, Pattern.compile(r), l) }
+    val hits = assertSameScans(texts.iterator, scans)
+    assert(hits.values.forall(_ > 0))
+  }
+
+  test("pipeline: deserialized copies of one pipeline share one engine; " +
+      "another config gets its own") {
+    def roundTrip(p: DocPipeline): DocPipeline = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(p)
+      out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[DocPipeline]
+    }
+    val pipe = DocPipeline(terms = Map("fievre" -> Seq("fièvre")),
+      regexPatterns = Map("spo2" -> Seq("spo2 \\d{2,3} %")), qualifiers = qualifiers)
+    val (a, b) = (roundTrip(pipe), roundTrip(pipe))
+    assert(a ne b)
+    assert(a.engine eq b.engine)
+    val other = roundTrip(pipe.copy(regexPatterns = Map("spo2" -> Seq("spo2 \\d+"))))
+    assert(other.engine ne a.engine)
+    val text = "Pas de fièvre, SpO2 92 % ce jour."
+    assert(a.annotate(text) === pipe.annotate(text))
+    assert(other.annotate(text).ents.map(_.text) === Seq("fièvre", "SpO2 92"))
   }
 }
