@@ -1,7 +1,5 @@
 package graft.nlp
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Rule-based sentence segmentation with the semantics of the reference's
   * compiled segmenter (`/root/reference/edsnlp/pipes/core/sentences/
   * fast_sentences.pyx:14-148`, defaults from `sentences.py:160-210`):
@@ -11,8 +9,6 @@ import scala.collection.mutable.ArrayBuffer
   * numbering); excluded (pollution) tokens are invisible to the rules.
   */
 object Sentencizer {
-  private val punctChars: Set[String] =
-    Set("!", ".", "?", "܂", "‼", "‽", "⁇", "⁈", "⁉", "﹖", "﹗", "！", "．", "？")
 
   case class Options(
       minNewlineCount: Int = 1,
@@ -20,27 +16,59 @@ object Sentencizer {
       checkCapitalized: Boolean = true,
       ignoreExcluded: Boolean = true)
 
-  private def isDigitTok(t: Token): Boolean =
-    t.text.nonEmpty && t.text.forall(Character.isDigit)
+  /** The closing punctuation chars: a token made of one of them ends a
+    * sentence.
+    */
+  private def isClosingPunct(c: Char): Boolean = c match {
+    case '!' | '.' | '?' | '\u0702' | '\u203C' | '\u203D' | '\u2047' |
+        '\u2048' | '\u2049' | '\uFE56' | '\uFE57' | '\uFF01' | '\uFF0E' |
+        '\uFF1F' => true
+    case _ => false
+  }
 
-  private def isPunctTok(t: Token): Boolean =
-    t.text.nonEmpty && t.text.forall(c =>
-      Character.getType(c) match {
-        case Character.CONNECTOR_PUNCTUATION | Character.DASH_PUNCTUATION |
-            Character.START_PUNCTUATION | Character.END_PUNCTUATION |
-            Character.INITIAL_QUOTE_PUNCTUATION |
-            Character.FINAL_QUOTE_PUNCTUATION | Character.OTHER_PUNCTUATION =>
-          true
-        case _ => false
-      })
+  /** `Character.getType` categories of a punctuation char, as a bit set. */
+  private val punctTypes: Int =
+    Seq(Character.CONNECTOR_PUNCTUATION, Character.DASH_PUNCTUATION,
+      Character.START_PUNCTUATION, Character.END_PUNCTUATION,
+      Character.INITIAL_QUOTE_PUNCTUATION, Character.FINAL_QUOTE_PUNCTUATION,
+      Character.OTHER_PUNCTUATION).foldLeft(0)((m, t) => m | (1 << t))
 
-  private def isCapitalized(t: Token): Boolean =
-    t.text.nonEmpty && Character.isUpperCase(t.text.charAt(0))
+  private def hasNewline(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\n' || c == '\r') return true
+      i += 1
+    }
+    false
+  }
+
+  private def isDigitTok(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (!Character.isDigit(s.charAt(i))) return false
+      i += 1
+    }
+    s.nonEmpty
+  }
+
+  private def isPunctTok(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if ((punctTypes & (1 << Character.getType(s.charAt(i)))) == 0)
+        return false
+      i += 1
+    }
+    s.nonEmpty
+  }
+
+  private def isCapitalized(s: String): Boolean =
+    s.nonEmpty && Character.isUpperCase(s.charAt(0))
 
   /** Token indices that start a sentence. */
   def sentenceStarts(tokens: Array[Token], opts: Options = Options())
       : Array[Boolean] = {
-    val starts = Array.fill(tokens.length)(false)
+    val starts = new Array[Boolean](tokens.length)
     if (tokens.isEmpty) return starts
     starts(0) = true
     var seenPeriod = false
@@ -49,20 +77,21 @@ object Sentencizer {
     while (i < tokens.length) {
       val t = tokens(i)
       if (!(opts.ignoreExcluded && t.excluded)) {
-        val isInPunct = punctChars.contains(t.text)
-        val isNewline = t.text.contains('\n') || t.text.contains('\r')
+        val s = t.text
+        val isInPunct = s.length == 1 && isClosingPunct(s.charAt(0))
+        val isNewline = hasNewline(s)
         val hardNewline =
           opts.hardNewlineCount >= 0 && newlineCount >= opts.hardNewlineCount
         var continued = false
         if (seenPeriod || newlineCount >= opts.minNewlineCount) {
-          if (seenPeriod && isDigitTok(t)) {
+          if (seenPeriod && isDigitTok(s)) {
             seenPeriod = false
             continued = true
-          } else if (!(isInPunct || isNewline || isPunctTok(t))) {
+          } else if (!(isInPunct || isNewline || isPunctTok(s))) {
             if (seenPeriod) starts(i) = true
             else
               starts(i) =
-                hardNewline || !opts.checkCapitalized || isCapitalized(t)
+                hardNewline || !opts.checkCapitalized || isCapitalized(s)
             newlineCount = 0
             seenPeriod = false
             continued = true
@@ -82,19 +111,24 @@ object Sentencizer {
   def sentences(tokens: Array[Token], opts: Options = Options())
       : Array[Sent] = {
     val starts = sentenceStarts(tokens, opts)
-    val out = new ArrayBuffer[Sent]
-    var sb = -1
-    var se = -1
+    var n = 0
     var i = 0
-    while (i < tokens.length) {
-      if (starts(i)) {
-        if (sb >= 0) out += Sent(sb, se)
-        sb = tokens(i).begin
-      }
-      se = tokens(i).end
+    while (i < starts.length) {
+      if (starts(i)) n += 1
       i += 1
     }
-    if (sb >= 0) out += Sent(sb, se)
-    out.toArray
+    val out = new Array[Sent](n)
+    var k = 0
+    var first = 0
+    i = 1
+    while (i <= tokens.length) {
+      if (i == tokens.length || starts(i)) {
+        out(k) = Sent(tokens(first).begin, tokens(i - 1).end)
+        k += 1
+        first = i
+      }
+      i += 1
+    }
+    out
   }
 }

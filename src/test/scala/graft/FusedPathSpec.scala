@@ -19,8 +19,9 @@ import graft.pipes.{Dates, DatesOptions, DocPipeline}
   * engine over several banks returns what one engine per bank, run one
   * after another, did; every lead-driven whole-text scan returns the
   * matches of the `find` loop, and no match starts where its lead rules
-  * one out, over the whole BMP; and deserialized copies of a pipeline
-  * share one engine.
+  * one out, over the whole BMP; deserialized copies of a pipeline
+  * share one engine; and the sentencizer's inline char checks give the
+  * sentences of the set-and-closure form.
   */
 class FusedPathSpec extends AnyFunSuite {
 
@@ -914,5 +915,153 @@ class FusedPathSpec extends AnyFunSuite {
     val text = "Pas de fièvre, SpO2 92 % ce jour."
     assert(a.annotate(text) === pipe.annotate(text))
     assert(other.annotate(text).ents.map(_.text) === Seq("fièvre", "SpO2 92"))
+  }
+
+  // ---- sentencizer: inline char checks vs the set and closures -------
+
+  /** `Sentencizer.sentenceStarts` and `sentences` as they were with a
+    * `Set[String]` lookup, `forall` closures and `contains` scans, kept
+    * verbatim as the oracle.
+    */
+  private object SetSentencizer {
+    import Sentencizer.Options
+
+    private val punctChars: Set[String] =
+      Set("!", ".", "?", "܂", "‼", "‽", "⁇", "⁈", "⁉", "﹖", "﹗", "！", "．", "？")
+
+    private def isDigitTok(t: Token): Boolean =
+      t.text.nonEmpty && t.text.forall(Character.isDigit)
+
+    private def isPunctTok(t: Token): Boolean =
+      t.text.nonEmpty && t.text.forall(c =>
+        Character.getType(c) match {
+          case Character.CONNECTOR_PUNCTUATION | Character.DASH_PUNCTUATION |
+              Character.START_PUNCTUATION | Character.END_PUNCTUATION |
+              Character.INITIAL_QUOTE_PUNCTUATION |
+              Character.FINAL_QUOTE_PUNCTUATION | Character.OTHER_PUNCTUATION =>
+            true
+          case _ => false
+        })
+
+    private def isCapitalized(t: Token): Boolean =
+      t.text.nonEmpty && Character.isUpperCase(t.text.charAt(0))
+
+    def sentenceStarts(tokens: Array[Token], opts: Options = Options())
+        : Array[Boolean] = {
+      val starts = Array.fill(tokens.length)(false)
+      if (tokens.isEmpty) return starts
+      starts(0) = true
+      var seenPeriod = false
+      var newlineCount = 0
+      var i = 0
+      while (i < tokens.length) {
+        val t = tokens(i)
+        if (!(opts.ignoreExcluded && t.excluded)) {
+          val isInPunct = punctChars.contains(t.text)
+          val isNewline = t.text.contains('\n') || t.text.contains('\r')
+          val hardNewline =
+            opts.hardNewlineCount >= 0 && newlineCount >= opts.hardNewlineCount
+          var continued = false
+          if (seenPeriod || newlineCount >= opts.minNewlineCount) {
+            if (seenPeriod && isDigitTok(t)) {
+              seenPeriod = false
+              continued = true
+            } else if (!(isInPunct || isNewline || isPunctTok(t))) {
+              if (seenPeriod) starts(i) = true
+              else
+                starts(i) =
+                  hardNewline || !opts.checkCapitalized || isCapitalized(t)
+              newlineCount = 0
+              seenPeriod = false
+              continued = true
+            }
+          }
+          if (!continued) {
+            if (isInPunct) seenPeriod = true
+            if (isNewline) newlineCount += 1 else newlineCount = 0
+          }
+        }
+        i += 1
+      }
+      starts
+    }
+
+    def sentences(tokens: Array[Token], opts: Options = Options())
+        : Array[Sent] = {
+      val starts = sentenceStarts(tokens, opts)
+      val out = new ArrayBuffer[Sent]
+      var sb = -1
+      var se = -1
+      var i = 0
+      while (i < tokens.length) {
+        if (starts(i)) {
+          if (sb >= 0) out += Sent(sb, se)
+          sb = tokens(i).begin
+        }
+        se = tokens(i).end
+        i += 1
+      }
+      if (sb >= 0) out += Sent(sb, se)
+      out.toArray
+    }
+  }
+
+  /** Every combination of the segmenter's options. */
+  private val sentencizerOptions = for {
+    minNl <- Seq(1, 2)
+    hardNl <- Seq(-1, 0, 2)
+    capitalized <- Seq(true, false)
+    ignoreExcluded <- Seq(true, false)
+  } yield Sentencizer.Options(minNl, hardNl, capitalized, ignoreExcluded)
+
+  /** Both forms give the same starts and sentences on every token array,
+    * under every option combination.
+    */
+  private def assertSameSentences(docs: Iterator[Array[Token]]): Unit = {
+    val bad = docs.flatMap(toks => sentencizerOptions.iterator
+      .filter(o => Sentencizer.sentenceStarts(toks, o).toSeq !=
+        SetSentencizer.sentenceStarts(toks, o).toSeq ||
+        Sentencizer.sentences(toks, o).toSeq !=
+        SetSentencizer.sentences(toks, o).toSeq)
+      .map(o => (toks.map(_.text).mkString("|"), o))).take(5).toSeq
+    assert(bad.isEmpty, bad.mkString("inline checks != set form on: ", ", ", ""))
+  }
+
+  /** Tokens over `texts` in a row, each excluded with probability 1/4. */
+  private def tokenRow(texts: Seq[String], rng: Random): Array[Token] = {
+    var at = 0
+    texts.map { t =>
+      val tok = Token(at, at + t.length, t, t, excluded = rng.nextInt(4) == 0)
+      at += t.length
+      tok
+    }.toArray
+  }
+
+  test("sentencizer: every BMP char as a token after a period, after a " +
+      "newline and doubled") {
+    val rng = new Random(29)
+    assertSameSentences((0 until 0x10000).iterator.flatMap { c =>
+      val s = c.toChar.toString
+      Iterator(Seq(".", s, "Le"), Seq("\n", s, "le"), Seq(s, s, "A"), Seq(s + s))
+        .map(tokenRow(_, rng))
+    })
+  }
+
+  test("sentencizer: 3,000 generated notes, as tokenized and with random " +
+      "exclusions") {
+    val rng = new Random(31)
+    assertSameSentences(generatedNotes(3000, 9).iterator.flatMap { t =>
+      val toks = Tokenizer.tokenize(t)
+      Iterator(toks, toks.map(k => k.copy(excluded = rng.nextInt(4) == 0)))
+    })
+  }
+
+  test("sentencizer: 300,000 seeded random token rows") {
+    val alphabet = "aAÉz.!?܂‼‽⁇⁈⁉﹖﹗！．？…,;:-«»()_\"'\n\r \t05٣²\u0085\u2028"
+    val rng = new Random(37)
+    def word(): String =
+      Seq.fill(rng.nextInt(4))(alphabet(rng.nextInt(alphabet.length))).mkString
+    assertSameSentences(Iterator.fill(300000)(
+      tokenRow(Seq.fill(rng.nextInt(9))(word()), rng)))
   }
 }
