@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** The reference's user-facing dataflow API
   * (`/root/reference/edsnlp/core/stream.py:278-921`: map / map_batches /
   * flatten / batchify-around / shuffle / loop / write over pluggable
@@ -82,7 +84,7 @@ case class Stream[T](ds: Dataset[T]) {
 object Stream {
   /** `edsnlp.data.read_parquet` analog. */
   def fromParquet(spark: SparkSession, path: String): Stream[org.apache.spark.sql.Row] =
-    Stream(spark.read.parquet(path))
+    Stream(Parquet.read(spark, path))
 
   def fromJson(spark: SparkSession, path: String): Stream[org.apache.spark.sql.Row] =
     Stream(spark.read.json(path))

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Large-scale deduplication operators for training-data pipelines.
   *
   * Everything here is expressed with codegen'd built-in functions (no UDF in
@@ -524,13 +526,13 @@ object Dedup {
       minHashSignatureFromText(col(textCol), 3, sigLength).as("sig"))
     val cand = bandBuckets(newSigs, "id", bands)
       .select(col("id").as("new_id"), col("bucket"))
-      .join(spark.read.parquet(s"$dir/buckets")
+      .join(Parquet.read(spark, s"$dir/buckets")
         .select(col("id").as("corpus_id"), col("bucket")), "bucket")
       .select("new_id", "corpus_id").distinct()
     val newSh = newDocs.select(col(idCol).as("new_id"),
       distinctShingleHashes64(3)(col(textCol)).as("sh_new"))
     cand.join(newSh, "new_id")
-      .join(spark.read.parquet(s"$dir/shingles")
+      .join(Parquet.read(spark, s"$dir/shingles")
         .select(col("id").as("corpus_id"), col("sh").as("sh_corpus")),
         "corpus_id")
       .withColumn("jaccard",

@@ -113,7 +113,7 @@ object Compact {
     // rewrite retires, and a loudly-missing sidecar beats silently
     // stale pruning — rebuild them after compacting.
     stagedSwap(spark, path.toString) { staging =>
-      spark.read.parquet(path.toString)
+      Parquet.read(spark, path.toString)
         .repartition(nOut)
         .write.mode("overwrite").parquet(staging)
     }

@@ -49,7 +49,7 @@ object Converters {
       "markup2doc" -> readMarkup("md"),
       "markup_xml2doc" -> readMarkup("xml"),
       "json2doc" -> ((s, p) => s.read.json(p)),
-      "parquet2doc" -> ((s, p) => s.read.parquet(p)))
+      "parquet2doc" -> ((s, p) => Parquet.read(s, p)))
 
   private val writers =
     scala.collection.concurrent.TrieMap[String, Writer](

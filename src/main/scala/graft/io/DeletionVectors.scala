@@ -83,7 +83,7 @@ object DeletionVectors {
     */
   def resolveHomes(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String, partCol: String): DataFrame =
-    spark.read.parquet(dir).select(col(keyCol), col(partCol))
+    Parquet.read(spark, dir).select(col(keyCol), col(partCol))
       .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi")
 
   /** All live deletion-vector keys: (keyCol, partCol) rows across the
@@ -123,7 +123,7 @@ object DeletionVectors {
     */
   def readWithDeletes(spark: SparkSession, dir: String, keyCol: String,
       partCol: String): DataFrame = {
-    val target = spark.read.parquet(dir)
+    val target = Parquet.read(spark, dir)
     val dv = deletedKeys(spark, dir, keyCol, partCol)
       .select(col(keyCol), col(partCol).as("__dv_part"))
     target.join(broadcast(dv),
@@ -164,7 +164,7 @@ object DeletionVectors {
       if (!fs.exists(pdir)) None // stale vector (partition drained)
       else {
         val keys = dv.filter(col(partCol) === v).select(col(keyCol))
-        val survivors = spark.read.parquet(pdir.toString)
+        val survivors = Parquet.read(spark, pdir.toString)
           .join(broadcast(keys), Seq(keyCol), "left_anti")
           .localCheckpoint() // materialize BEFORE the swap mutates pdir
         Compact.stagedSwap(spark, pdir.toString) { staging =>

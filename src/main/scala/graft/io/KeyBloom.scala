@@ -86,7 +86,7 @@ object KeyBloom {
     */
   def buildKeyBloom(spark: SparkSession, dir: String, keyCol: String,
       log2Bits: Int = 16, k: Int = 4): Long =
-    buildKeyBloomFor(spark, dir, spark.read.parquet(dir), keyCol,
+    buildKeyBloomFor(spark, dir, Parquet.read(spark, dir), keyCol,
       log2Bits, k)
 
   /** [[buildKeyBloom]] over an explicit frame — for tables whose live
@@ -142,7 +142,7 @@ object KeyBloom {
     val (files, stats) = filesForKeys(spark, dir, keys, log2Bits, k)
     // basePath keeps partition columns alive under hive-style layouts
     val df =
-      if (files.isEmpty) spark.read.parquet(dir).filter(lit(false))
+      if (files.isEmpty) Parquet.read(spark, dir).filter(lit(false))
       else spark.read.option("basePath", dir)
         .parquet(files.toIndexedSeq: _*)
     (df, stats)

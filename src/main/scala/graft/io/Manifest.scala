@@ -64,7 +64,7 @@ object Manifest {
     */
   def buildManifest(spark: SparkSession, dir: String,
       statsCols: Seq[String]): Long =
-    buildManifestFor(spark, dir, spark.read.parquet(dir), statsCols)
+    buildManifestFor(spark, dir, Parquet.read(spark, dir), statsCols)
 
   /** [[buildManifest]] over an explicit frame — for tables whose live
     * file set is NOT "every parquet under dir" (a [[VersionLog]]
@@ -112,7 +112,7 @@ object Manifest {
     // under hive-style partition directories (no-op for flat layouts)
     val df =
       if (kept.isEmpty)
-        spark.read.parquet(dir).filter(lit(false))
+        Parquet.read(spark, dir).filter(lit(false))
       else spark.read.option("basePath", dir)
         .parquet(kept.toIndexedSeq: _*)
     (df, stats)

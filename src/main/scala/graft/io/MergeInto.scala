@@ -195,7 +195,7 @@ object MergeInto {
       s"null/empty $partCol in update batch: the default-partition " +
         "directory is outside this merge's addressing")
     val allKeys = batch.select(col(keyCol))
-    val target = spark.read.parquet(dir)
+    val target = Parquet.read(spark, dir)
     // old homes of matched keys: column-pruned (key, part) scan +
     // semi join — catches rows whose partition value the update moves
     val matchedHomes = target.select(col(keyCol), col(partCol))
@@ -334,7 +334,7 @@ object MergeInto {
     // commit (the publish below deletes the drained directories)
     val outputRows =
       if (presentDirs.isEmpty) 0L
-      else spark.read.parquet(stagingPath.toString).count()
+      else Parquet.read(spark, stagingPath.toString).count()
     val touchedDirs =
       touched.map(v => s"$partCol=${escapePathName(String.valueOf(v))}")
     touchedDirs.foreach(n => fs.delete(new Path(dir, n), true))
@@ -471,7 +471,7 @@ object MergeInto {
         throw new java.io.IOException(
           s"could not publish feed batch $name under $root")
     }
-    spark.read.parquet(batchDir.toString)
+    Parquet.read(spark, batchDir.toString)
   }
 
   /** Drop a staged feed batch (commit CAS lost): the staging rows and

@@ -37,7 +37,7 @@ object Sidecar {
     fs.delete(staging, true)
     fs.delete(retired, true)
     frame.coalesce(1).write.parquet(staging.toString)
-    val n = spark.read.parquet(staging.toString).count()
+    val n = Parquet.read(spark, staging.toString).count()
     val hadLive = fs.exists(live)
     if (hadLive && !fs.rename(live, retired))
       throw new java.io.IOException(s"could not retire $name at $live")

@@ -102,7 +102,7 @@ object StatsMaintenance {
   def cdcDeltaStream(spark: SparkSession, tableDir: String,
       groupCol: String, metrics: Seq[(String, Column)]): DataFrame = {
     val root = tableDir.stripSuffix("/") + "._cdc"
-    val schema = spark.read.parquet(root + "/batch-*").schema
+    val schema = Parquet.read(spark, root + "/batch-*").schema
     val feed = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 64)
       .parquet(root + "/batch-*")

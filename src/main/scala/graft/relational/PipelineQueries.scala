@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, ExactSubstring, SimHash}
-import graft.io.{Compact, DeletionVectors, KeyBloom, Manifest, MergeInto, StatsMaintenance, VersionLog, ZOrder}
+import graft.io.{Compact, DeletionVectors, KeyBloom, Manifest, MergeInto, Parquet, StatsMaintenance, VersionLog, ZOrder}
 import graft.multimodal.Multimodal
 import graft.similarity.{Ann, PortableLsh, Pq, RandomProjection, Sq}
 import graft.text.{Sketches, TextStats}
@@ -1796,7 +1796,7 @@ object PipelineQueries {
           .withColumn("doc_id", $"doc_id" + 100000000L)
           .withColumn("lang", lit("xx")))
       MergeInto.mergeByKey(s, dir, updates, "doc_id", "lang")
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(length($"text")).as("sum_len"),
@@ -1843,12 +1843,12 @@ object PipelineQueries {
       val (_, feed) = MergeInto.mergeByKeyCdc(s, base, batch,
         "doc_id", "lang", deleteWhen = Some($"_del"))
       val updated = StatsMaintenance.applyCdc(
-        s.read.parquet(statsDir), feed, "lang", metrics)
+        Parquet.read(s, statsDir), feed, "lang", metrics)
       // persist the maintained view crash-safely (staging write runs
       // while the old view is still live, so the self-read is safe)
       Compact.stagedSwap(s, statsDir)(
         staging => updated.write.parquet(staging))
-      s.read.parquet(statsDir).orderBy($"lang")
+      Parquet.read(s, statsDir).orderBy($"lang")
     },
     "q125_manifest_scan" -> { (s, d) =>
       import s.implicits._
@@ -2823,7 +2823,7 @@ object PipelineQueries {
       // '[v2]' images, insert = the shifted xx rows, delete = the
       // de%13 rows), so a misclassified or lost change cannot match.
       val dir = mergedSnapshotDir(s, d)
-      s.read.parquet(s"$dir._cdc/batch-00000")
+      Parquet.read(s, s"$dir._cdc/batch-00000")
         .groupBy($"_op", $"lang")
         .agg(count(lit(1)).as("n"),
           sum($"doc_id").as("sum_ids"),

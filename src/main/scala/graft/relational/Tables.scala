@@ -2,17 +2,21 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.Parquet
+
 /** Loaders for the driver-generated star schema (see /root/repo/TESTDATA.md).
   *
   * Every loader is a plain parquet scan: Catalyst handles column pruning and
   * predicate pushdown, so callers just `select`/`filter` and the scan narrows
   * automatically. At 100 TB these tables would be partitioned (e.g. orders by
   * o_orderdate month); nothing here assumes single-file layout — `dir/name
-  * .parquet` can be a directory of fragments.
+  * .parquet` can be a directory of fragments. Each read takes its schema
+  * from one footer, read in-process (`graft.io.Parquet.read`), so building a
+  * table's DataFrame runs no Spark job.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

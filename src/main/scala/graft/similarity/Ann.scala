@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Brute-force cosine top-k is the exact baseline: a broadcast of the query
@@ -418,7 +420,7 @@ object Ann {
     */
   def appendToIvfIndex(newVecs: DataFrame, indexDir: String): Unit = {
     val spark = newVecs.sparkSession
-    val centers = spark.read.parquet(s"$indexDir/centroids.parquet")
+    val centers = Parquet.read(spark, s"$indexDir/centroids.parquet")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     newVecs
@@ -438,7 +440,7 @@ object Ann {
     */
   def probeIvfIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int = 3): DataFrame = {
-    val centers = spark.read.parquet(s"$indexDir/centroids.parquet")
+    val centers = Parquet.read(spark, s"$indexDir/centroids.parquet")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     // qs is deliberately NOT checkpointed: the probe projection is
@@ -456,7 +458,7 @@ object Ann {
     val probed = cellCounts.map(_.getInt(0))
     val qsIn =
       graft.core.Spread.probeBatch(qs, cellCounts.map(_.getLong(1)).sum)
-    val cs = spark.read.parquet(s"$indexDir/cells.parquet")
+    val cs = Parquet.read(spark, s"$indexDir/cells.parquet")
       .filter(col("cell").isin(probed.toSeq: _*))
       .select(col("id").as("neighbor_id"), col("vec").as("cv"),
         col("cell"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Product quantization (the FAISS `IndexPQ` shape — Jégou et al.,
   * "Product Quantization for Nearest Neighbor Search", TPAMI 2011): the
   * memory answer at corpus scale. Vectors are cut into `m` subspaces;
@@ -232,13 +234,13 @@ object Pq {
 
   private def readCenters(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centroids.parquet")
+    Parquet.read(spark, s"$dir/centroids.parquet")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
 
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(s"$dir/codebooks.parquet")
+    Parquet.read(spark, s"$dir/codebooks.parquet")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toArray.sortBy(_._1)
@@ -267,7 +269,7 @@ object Pq {
     val probed = cellCounts.map(_.getInt(0))
     val qsIn =
       graft.core.Spread.probeBatch(qs, cellCounts.map(_.getLong(1)).sum)
-    val cs = spark.read.parquet(s"$dir/codes.parquet")
+    val cs = Parquet.read(spark, s"$dir/codes.parquet")
       .filter(col("cell").isin(probed.toSeq: _*))
       .select(col("id").as("neighbor_id"), col("code"), col("cell"))
     val scored = cs.join(qsIn, "cell")
@@ -297,7 +299,7 @@ object Pq {
     val qs = queries.select(col("id").as("query_id"),
       col("vec").as("qv"), adc.qnorm(col("vec")).as("qn"),
       explode(Ann.probeUdf(centers, nprobe)(col("vec"))).as("cell"))
-    val cs = spark.read.parquet(s"$dir/codes.parquet")
+    val cs = Parquet.read(spark, s"$dir/codes.parquet")
       .select(col("id").as("neighbor_id"), col("code"), col("cell"))
     val scored = cs.join(qs, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))

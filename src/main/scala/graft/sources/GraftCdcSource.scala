@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, PrunedFilteredScan, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.io.{TableSnapshot, VersionLog}
+import graft.io.{Parquet, TableSnapshot, VersionLog}
 
 /** `format("graft-cdc")` — the maintained table's row-level CHANGE
   * FEED (before/after images tagged `_op` ∈
@@ -186,7 +186,7 @@ object GraftCdcSource {
         if (batches.nonEmpty)
           spark.read.option("mergeSchema", "true")
             .parquet(batches.map(_._2.toString): _*).schema
-        else spark.read.parquet(dir)
+        else Parquet.read(spark, dir)
           .withColumn("_op", lit("insert")).schema
       }
     StructType(base.fields :+ StructField("_feed_batch", LongType))
@@ -213,7 +213,7 @@ object GraftCdcSource {
     val snap = VersionLog.snapshot(spark, dir, Some(v))
     val images = snap.feed match {
       case Some(name) =>
-        spark.read.parquet(s"$base._cdc/$name")
+        Parquet.read(spark, s"$base._cdc/$name")
       case None => synthesizeChanges(spark, dir, snap)
     }
     remapToCurrent(images, snap, latest)
@@ -542,7 +542,7 @@ private final class CdcFeedStreamSource(spark: SparkSession,
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else picked.map { case (i, p) =>
-          spark.read.parquet(p.toString)
+          Parquet.read(spark, p.toString)
             .withColumn("_feed_batch", lit(i))
         }.reduce(_.unionByName(_, allowMissingColumns = true))
     // align to the declared schema (order + evolution null-fill)

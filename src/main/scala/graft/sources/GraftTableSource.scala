@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.{SparkSession, SQLContext}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.io.{KeyBloom, VersionLog}
+import graft.io.{KeyBloom, Parquet, VersionLog}
 
 /** `spark.read.format("graft").load(dir)` — the maintained table as a
   * first-class Spark data source, with ALL of this engine's metadata
@@ -907,7 +907,7 @@ private[graft] final class GraftFileIndex(spark: SparkSession,
     val p = new Path(base, "._manifest")
     if (!manifestExists) None
     else {
-      val all = spark.read.parquet(p.toString)
+      val all = Parquet.read(spark, p.toString)
       val df =
         if (chain.isEmpty) all
         else all.filter(org.apache.spark.sql.functions.col("file")
@@ -1153,7 +1153,7 @@ private[graft] final class GraftFileIndex(spark: SparkSession,
   private def loadBlooms(): Option[Map[String, Map[Int, Long]]] = {
     val p = new Path(base, "._keybloom")
     if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).collect().map { row =>
+    else Some(Parquet.read(spark, p.toString).collect().map { row =>
       new Path(row.getAs[String]("file")).toUri.getPath ->
         row.getAs[Map[Int, Long]]("bloom")
     }.toMap)

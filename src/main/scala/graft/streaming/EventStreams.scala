@@ -7,6 +7,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   ValueState}
 import org.apache.spark.sql.types._
 
+import graft.io.Parquet
+
 /** Structured Streaming operators over the events stream — the engine's
   * answer to the reference's sentinel-punctuated infinite streams
   * (`loop`, `edsnlp/utils/stream_sentinels.py`; incremental per-fragment
@@ -26,15 +28,16 @@ object EventStreams {
   /** File-stream source over a directory of events parquet. readStream
     * needs an explicit schema, but the driver's `ts` physical encoding has
     * varied across data generations (nanos-as-long, untagged micros →
-    * TIMESTAMP_NTZ, UTC micros). Probe the directory with a one-off batch
-    * read (footer-only — no data scanned) and derive both the stream
-    * schema and the unit conversion from what is actually on disk, the
-    * same normalization as the batch loader (`Tables.eventsTs`): every
-    * downstream watermark/window sees a session-tz TimestampType.
+    * TIMESTAMP_NTZ, UTC micros). Probe the directory's schema with
+    * `Parquet.read` (one footer, read in-process: no Spark job unless
+    * the layout sends it back to Spark's inference job) and derive both
+    * the stream schema and the unit conversion from what is actually on
+    * disk, the same normalization as the batch loader (`Tables.eventsTs`):
+    * every downstream watermark/window sees a session-tz TimestampType.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val onDisk = spark.read.parquet(dir).schema
+    val onDisk = Parquet.read(spark, dir).schema
     graft.relational.Tables.eventsTs(
       spark.readStream.schema(onDisk).parquet(dir))
   }
@@ -531,14 +534,14 @@ object EventStreams {
   def annProbeVecs(spark: SparkSession, indexDir: String,
       queries: DataFrame, // streaming (id, vec array<double>)
       k: Int, nprobe: Int = 2): DataFrame = {
-    val centers = spark.read.parquet(s"$indexDir/centroids.parquet")
+    val centers = Parquet.read(spark, s"$indexDir/centroids.parquet")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     val qs = queries.select(col("id").as("query_id"),
       col("vec").as("qv"),
       explode(graft.similarity.Ann.probeUdf(centers, nprobe)(col("vec")))
         .as("cell"))
-    val cs = spark.read.parquet(s"$indexDir/cells.parquet")
+    val cs = Parquet.read(spark, s"$indexDir/cells.parquet")
       .select(col("id").as("neighbor_id"), col("vec").as("cv"),
         col("cell"))
     graft.similarity.Ann.probeJoinTopK(cs, qs, k)
@@ -944,17 +947,17 @@ object EventStreams {
       queries: DataFrame, // streaming (id, terms array<string>)
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import spark.implicits._
-    val stats = spark.read.parquet(s"$indexDir/stats")
+    val stats = Parquet.read(spark, s"$indexDir/stats")
       .select(col("n_docs").cast("double").as("n_docs"),
         col("sum_dl").cast("double").as("sum_dl"))
-    val dfreq = spark.read.parquet(s"$indexDir/terms")
+    val dfreq = Parquet.read(spark, s"$indexDir/terms")
       .select(col("term"), col("df").cast("double").as("df"))
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
     val denom = col("tf").cast("double") + lit(k1) *
       (lit(1.0 - b) + lit(b) * col("dl").cast("double") *
         col("n_docs") / col("sum_dl"))
-    val scored = spark.read.parquet(s"$indexDir/postings")
+    val scored = Parquet.read(spark, s"$indexDir/postings")
       .join(broadcast(dfreq), "term")
       .join(broadcast(stats))
       .select(col("term"), col("id"),

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** BM25 keyword retrieval over a document corpus — the lexical member of
   * the similarity-search family (brute-force / LSH / IVF / PQ cover the
   * embedding side). Okapi BM25 with the standard (k1, b) shape and the
@@ -97,7 +99,7 @@ object Bm25 {
     postings.repartition(nBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/postings")
-    docs.sparkSession.read.parquet(s"$dir/postings")
+    Parquet.read(docs.sparkSession, s"$dir/postings")
       .groupBy("term", "bucket")
       .agg(count(lit(1)).cast("long").as("df"))
       .repartition(nBuckets, col("bucket"))
@@ -134,14 +136,14 @@ object Bm25 {
     delta.repartition(nBuckets, col("bucket"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$dir/postings")
-    val old = spark.read.parquet(s"$dir/stats")
+    val old = Parquet.read(spark, s"$dir/stats")
       .select("n_docs", "sum_dl").head()
     val add = newDocs.agg(count(lit(1)).cast("long").as("n_docs"),
       sum(size(words).cast("long")).as("sum_dl")).head()
     Seq((old.getLong(0) + add.getLong(0), old.getLong(1) + add.getLong(1)))
       .toDF("n_docs", "sum_dl")
       .write.mode("overwrite").parquet(s"$dir/stats")
-    val merged = spark.read.parquet(s"$dir/terms")
+    val merged = Parquet.read(spark, s"$dir/terms")
       .select("term", "df", "bucket")
       .union(delta.groupBy("term", "bucket")
         .agg(count(lit(1)).cast("long").as("df"))
@@ -172,14 +174,14 @@ object Bm25 {
       ((h % nBuckets) + nBuckets) % nBuckets
     }.distinct
     val termList = terms.map(lit)
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = Parquet.read(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets: _*) &&
         col("term").isin(termList: _*))
-    val dfreq = spark.read.parquet(s"$dir/terms")
+    val dfreq = Parquet.read(spark, s"$dir/terms")
       .filter(col("bucket").isin(buckets: _*) &&
         col("term").isin(termList: _*))
       .select(col("term"), col("df").cast("double").as("df"))
-    val stats = spark.read.parquet(s"$dir/stats")
+    val stats = Parquet.read(spark, s"$dir/stats")
       .select(col("n_docs").cast("double").as("n_docs"),
         col("sum_dl").cast("double").as("sum_dl"))
     val idf = log(lit(1.0) +

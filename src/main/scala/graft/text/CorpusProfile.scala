@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Persisted, incrementally-maintained corpus datasheet — the
   * operational form of the q82/q100 profile: per-key document count,
   * token count, and the HLL distinct-token registers, stored as two
@@ -45,12 +47,12 @@ object CorpusProfile {
   def append(delta: DataFrame, keyCol: String, textCol: String,
       dir: String): Unit = {
     val spark = delta.sparkSession
-    val mergedStats = spark.read.parquet(s"$dir/stats")
+    val mergedStats = Parquet.read(spark, s"$dir/stats")
       .union(stats(delta, keyCol, textCol))
       .groupBy("key")
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"))
-    val mergedRegs = spark.read.parquet(s"$dir/registers")
+    val mergedRegs = Parquet.read(spark, s"$dir/registers")
       .union(Sketches.hllRegisters(toks(delta, keyCol, textCol),
         "key", "word"))
       .groupBy("key", "bucket").agg(max(col("rho")).as("rho"))
@@ -67,9 +69,9 @@ object CorpusProfile {
     * est_distinct) — registers-only, no corpus access.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/stats")
+    Parquet.read(spark, s"$dir/stats")
       .join(Sketches.hllEstimate(
-          spark.read.parquet(s"$dir/registers"))
+          Parquet.read(spark, s"$dir/registers"))
         .select(col("key"), col("est").as("est_distinct")), "key")
       .select(col("key"), col("n_docs"), col("n_tokens"),
         col("est_distinct"))

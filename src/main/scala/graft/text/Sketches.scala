@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Parquet
+
 /** Mergeable cardinality / frequency sketches — the bounded-state
   * aggregation layer a 100 TB corpus survey runs where exact groupBys
   * would shuffle the vocabulary (reference counterpart: the corpus
@@ -122,7 +124,7 @@ object Sketches {
   def appendHllRegisters(delta: DataFrame, keyCol: String,
       valCol: String, dir: String): Unit = {
     val spark = delta.sparkSession
-    val merged = spark.read.parquet(dir)
+    val merged = Parquet.read(spark, dir)
       .union(hllRegisters(delta, keyCol, valCol))
       .groupBy("key", "bucket")
       .agg(max(col("rho")).as("rho"))
@@ -140,7 +142,7 @@ object Sketches {
   def appendCmsRegisters(delta: DataFrame, valCol: String, dir: String,
       d: Int = 4, w: Int = 512): Unit = {
     val spark = delta.sparkSession
-    val merged = spark.read.parquet(dir)
+    val merged = Parquet.read(spark, dir)
       .union(cmsRegisters(delta, valCol, d, w))
       .groupBy("r", "c")
       .agg(sum(col("ct")).as("ct"))
